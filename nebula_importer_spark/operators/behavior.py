@@ -3,8 +3,7 @@ sequential funnels.
 
 Reference analog: nebula-importer has no analytics plane (it stops at
 bulk load); these are the first queries a NebulaGraph/warehouse consumer
-runs on an ingested event table, re-expressed Spark-first. The driver
-oracles live in __spark_entry__ (retention_cohorts / funnel_steps).
+runs on an ingested event table, re-expressed Spark-first.
 
 Scale shape:
 

@@ -1,7 +1,6 @@
 """Retention cohorts + sequential funnel (operators/behavior.py).
 
-Hand-computed values on tiny frames; sf-scale hash parity vs DuckDB
-lives in __spark_entry__ (retention_cohorts / funnel_steps oracles).
+Hand-computed values on tiny frames.
 """
 
 from __future__ import annotations

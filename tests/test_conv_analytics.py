@@ -1,8 +1,6 @@
 """Conversation-level transcript analytics (transcripts/analytics.py).
 
-Unit values are hand-computed on tiny frames; the sf-scale hash parity
-vs DuckDB lives in __spark_entry__ (conv_stats / conv_tool_chains /
-conv_response_latency / conv_template_dedup oracles).
+Unit values are hand-computed on tiny frames.
 """
 
 from __future__ import annotations
