@@ -3,6 +3,8 @@
     spark-submit --py-files nebula_importer_spark.zip -m ...   (cluster)
     python -m nebula_importer_spark import -c config.yaml -o out/   (local)
     python -m nebula_importer_spark kg --turns 100000 -o out/ [--resume]
+    python -m nebula_importer_spark kg --input t.parquet --aliases a.parquet \
+        [--same-as s.parquet] -o out/
     python -m nebula_importer_spark statements -c config.yaml -o out/
 
 ``import`` is the reference-CLI analog (nebula-importer -c config.yaml,
@@ -12,7 +14,10 @@ semantics, reference pkg/cmd/nebula-importer.go:126-128).
 
 ``kg`` runs the north-star transcript→triple pipeline end-to-end on a
 deterministic generated corpus (or a parquet/Iceberg table via --input) and
-is resumable from the snapshot manifest (--resume).
+is resumable from the snapshot manifest (--resume). Real transcripts link
+against the caller's alias dictionary (--aliases: alias, entity_id) and
+equivalences (--same-as: entity_id, dup_id); the generated corpus's own
+dictionary is the default only for generated transcripts.
 """
 
 from __future__ import annotations
@@ -34,6 +39,15 @@ def _cmd_import(args: argparse.Namespace) -> int:
 
 
 def _cmd_kg(args: argparse.Namespace) -> int:
+    if args.input and not args.aliases:
+        print(
+            "error: kg --input needs --aliases (a parquet alias dictionary "
+            "with columns alias, entity_id); the generated corpus's "
+            "dictionary cannot link real transcripts",
+            file=sys.stderr,
+        )
+        return 2
+
     import json
 
     from nebula_importer_spark.session import get_spark
@@ -48,11 +62,15 @@ def _cmd_kg(args: argparse.Namespace) -> int:
         transcripts = spark.read.parquet(args.input)
     else:
         transcripts = gen_transcripts_spark(spark, n_turns=args.turns)
-    # alias dictionary + equivalences from the deterministic corpus universe
-    c = gen_corpus_local(seed=42, n_convs=1, turns_per_conv=1)
-    d = c.to_spark(spark)
+    if args.aliases:
+        alias_dict = spark.read.parquet(args.aliases)
+        same_as = spark.read.parquet(args.same_as) if args.same_as else None
+    else:
+        # alias dictionary + equivalences from the deterministic corpus universe
+        d = gen_corpus_local(seed=42, n_convs=1, turns_per_conv=1).to_spark(spark)
+        alias_dict, same_as = d["alias_dict"], d["same_as"]
     pipe = TranscriptPipeline(spark)
-    res = pipe.run(transcripts, d["alias_dict"], d["same_as"], args.output, resume=args.resume)
+    res = pipe.run(transcripts, alias_dict, same_as, args.output, resume=args.resume)
     print(
         json.dumps(
             {
@@ -230,6 +248,14 @@ def main(argv: list[str] | None = None) -> int:
 
     kg = sub.add_parser("kg", help="run the transcript→triple KG pipeline")
     kg.add_argument("--input", default=None, help="parquet transcript table")
+    kg.add_argument(
+        "--aliases", default=None,
+        help="parquet alias dictionary (alias, entity_id); required with --input",
+    )
+    kg.add_argument(
+        "--same-as", dest="same_as", default=None,
+        help="parquet entity equivalences (entity_id, dup_id)",
+    )
     kg.add_argument("--turns", type=int, default=100_000)
     kg.add_argument("-o", "--output", required=True)
     kg.add_argument("--master", default=None)

@@ -1,4 +1,5 @@
-"""Connected components via iterative DataFrame joins (canonicalization).
+"""Connected components via iterative DataFrame joins, and the
+canonicalization mapping via a driver-side union-find.
 
 Min-label propagation ("hash-to-min") with pointer jumping: every node
 repeatedly adopts the smallest label in its closed neighborhood, then
@@ -20,9 +21,11 @@ parquet write+read-back runs every round flat (~7.5 s) indefinitely: file
 actions behave like ``count()`` (always fast), and the read-back plan is a
 clean scan with no RDD/AQE state carried between rounds.
 
-Entity-equivalence graphs (same_as pairs, dedup clusters) are shallow —
-diameter 2-4 — and converge in 1-2 rounds; the jump machinery is for the
-adversarial deep-graph case.
+``connected_components`` is for graphs that do not fit on the driver
+(``operators/graph.py::boruvka_msf`` runs it). Canonicalization does not
+use it: ``canonical_mapping``'s callers broadcast the mapping, so the
+same_as graph is driver-sized by contract, and a union-find over one
+collect replaces ~26 Spark jobs per round with one.
 
 Derived operator per SURVEY §2.8 (north-star canonicalization step); the
 reference has no join/iteration machinery at all (SURVEY §2.7).
@@ -35,6 +38,7 @@ import uuid
 
 from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 
 def _fs_delete(spark, path: str) -> None:
@@ -217,18 +221,58 @@ def connected_components(
 
 
 def canonical_mapping(
-    same_as: DataFrame,
-    left: str = "entity_id",
-    right: str = "dup_id",
-    checkpoint_dir: str | None = None,
+    same_as: DataFrame, left: str = "entity_id", right: str = "dup_id"
 ) -> DataFrame:
-    """same_as pairs → (entity_id, canonical_id) covering every id that
-    appears in any pair; ids not in the mapping are their own canonical
-    (callers coalesce). ``checkpoint_dir`` passes through to the iteration
-    snapshots (co-locate with the run's store on a shared FS)."""
-    comp = connected_components(
-        same_as, src=left, dst=right, checkpoint_dir=checkpoint_dir
+    """same_as pairs → (entity_id, canonical_id), where canonical_id is the
+    min id of the entity's equivalence class. Covers every id of every pair
+    whose two sides are non-null; ids not in the mapping are their own
+    canonical (callers coalesce).
+
+    Driver-side union-find: the non-null pairs are collected in ONE Spark
+    job and unioned with min-root union-find and path compression. Python
+    ``str`` order is code-point order, which is Spark's UTF-8 binary string
+    order, and Python ints compare as Spark longs, so the min matches
+    ``F.min`` over the same column. The result is a local DataFrame typed
+    as same_as's id column (the type a union of ``left`` and ``right``
+    coerces to).
+
+    Size contract: the pairs and the mapping live on the driver. Both
+    callers (``TranscriptPipeline.canonical_triples`` and
+    ``streaming.transcripts.compact_canonicalize``) broadcast the mapping,
+    so it already had to fit there; for a graph that does not, use
+    ``connected_components``.
+    """
+    id_type = (
+        same_as.select(F.col(left).alias("id"))
+        .unionByName(same_as.select(F.col(right).alias("id")))
+        .schema[0]
+        .dataType
     )
-    return comp.select(
-        F.col("node").alias("entity_id"), F.col("component").alias("canonical_id")
+    pairs = (
+        same_as.select(F.col(left).cast(id_type), F.col(right).cast(id_type))
+        .dropna()
+        .collect()
+    )
+    parent: dict = {}
+
+    def find(x):
+        root = x
+        while parent[root] != root:
+            root = parent[root]
+        while parent[x] != root:  # path compression
+            parent[x], x = root, parent[x]
+        return root
+
+    for a, b in pairs:
+        parent.setdefault(a, a)
+        parent.setdefault(b, b)
+        ra, rb = find(a), find(b)
+        if ra != rb:
+            lo, hi = (ra, rb) if ra < rb else (rb, ra)
+            parent[hi] = lo
+    schema = T.StructType(
+        [T.StructField("entity_id", id_type), T.StructField("canonical_id", id_type)]
+    )
+    return same_as.sparkSession.createDataFrame(
+        [(x, find(x)) for x in parent], schema
     )

@@ -137,15 +137,14 @@ def run_incremental_kg(
     return seen
 
 
-def compact_canonicalize(
-    store: TableStore, same_as: DataFrame, checkpoint_dir: str | None = None
-) -> int:
-    """Periodic global canonicalization compaction: run connected components
-    over the same-as graph and rewrite the accumulated triple table with
-    canonical entity ids (min id per equivalence class). Returns the new
-    snapshot version (0 when there is nothing to compact). Idempotent —
-    canonical ids are fixpoints of the mapping, so re-running is a no-op
-    rewrite of identical rows."""
+def compact_canonicalize(store: TableStore, same_as: DataFrame) -> int:
+    """Periodic global canonicalization compaction: canonicalize the
+    same-as graph (``canonical_mapping``'s driver-side union-find; the
+    mapping is broadcast, so same_as must be broadcast-sized) and rewrite
+    the accumulated triple table with canonical entity ids (min id per
+    equivalence class). Returns the new snapshot version (0 when there is
+    nothing to compact). Idempotent — canonical ids are fixpoints of the
+    mapping, so re-running is a no-op rewrite of identical rows."""
     from nebula_importer_spark.operators.connected_components import (
         canonical_mapping,
     )
@@ -156,7 +155,7 @@ def compact_canonicalize(
     # Non-fixpoint mappings only: entities already canonical need no rewrite,
     # so the affected row set (and the buckets both merges touch) is ∝ the
     # NEW equivalences, not the table size.
-    canon = canonical_mapping(same_as, checkpoint_dir=checkpoint_dir).filter(
+    canon = canonical_mapping(same_as).filter(
         F.col("entity_id") != F.col("canonical_id")
     )
     cs = canon.select(F.col("entity_id").alias("subj"), F.col("canonical_id").alias("_cs"))

@@ -8,16 +8,20 @@ Stages (each a checkpointable snapshot in the TableStore):
                many tasks (extraction is row-local → salting is safe)
 3. link      — broadcast-exact + MinHash-LSH fuzzy entity linking of the
                distinct mention vocabulary
-4. canon     — connected components over same_as pairs; every entity id maps
-               to the min id of its equivalence class
+4. canon     — every entity id maps to the min id of its same_as
+               equivalence class. canonical_mapping collects the same_as
+               pairs in one Spark job and unions them on the driver
+               (min-root union-find); the mapping is broadcast into the
+               link join, so same_as must be broadcast-sized
 5. material  — vertex + edge tables in the reference's tag/edge schema shape
                (tags/entity: vid + name + kind; edges/<pred>: src, dst, rank,
                conv_id, turn_idx) + rejects (unlinked mentions) + per-stage
                metrics
 
 Everything between parquet reads and writes is DataFrame expressions + one
-mapInPandas kernel; no driver-side row loops, no collects of data rows
-(only aggregate counts for metrics).
+mapInPandas kernel; the only rows collected to the driver are the same_as
+pairs of stage 4. run()'s counts (turns, triples, unlinked mentions) are
+Observations riding the writes that already happen, not extra actions.
 """
 
 from __future__ import annotations
@@ -26,7 +30,7 @@ import time
 from dataclasses import dataclass, field
 from pathlib import Path
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from nebula_importer_spark.config.model import Mode
@@ -115,15 +119,12 @@ class TranscriptPipeline:
         surface_triples: DataFrame,
         links: DataFrame,
         same_as: DataFrame | None,
-        checkpoint_dir: str | None = None,
     ) -> tuple[DataFrame, DataFrame]:
         """Stages 3b-4: resolve surface forms → canonical entity triples.
-        Returns (triples, unlinked_mentions). ``checkpoint_dir`` hosts the
-        connected-components iteration snapshots (run() co-locates them
-        with the store)."""
+        Returns (triples, unlinked_mentions)."""
         links = links.select("mention_norm", "entity_id")
-        if same_as is not None and not same_as.isEmpty():
-            canon = canonical_mapping(same_as, checkpoint_dir=checkpoint_dir)
+        if same_as is not None:
+            canon = canonical_mapping(same_as)
             links = (
                 links.join(F.broadcast(canon), "entity_id", "left")
                 .select(
@@ -191,33 +192,42 @@ class TranscriptPipeline:
     def _run_metered(
         self, transcripts, alias_dict, same_as, store, res, resume, t0, meter
     ) -> TranscriptRunResult:
-        res.turns = transcripts.count()
-        meter.add(res.turns)
-
         def _stage(name: str, fn):
+            def snapshot() -> str:
+                return str(store.root / name / f"v={store.current_version(name)}")
+
             if resume and store.stage_completed(name):
-                return self.spark.read.parquet(
-                    str(store.root / name / f"v={store.current_version(name)}")
-                )
+                return self.spark.read.parquet(snapshot())
             t = time.time()
             df = fn()
             store.commit(df, name)
             store.mark_stage(name)
             res.stages[name] = time.time() - t
-            return store.read(name)
+            # read back with the schema just written: inferring it from the
+            # parquet footers would cost a Spark job per stage
+            return self.spark.read.schema(df.schema).parquet(snapshot())
 
-        surface = _stage("stage/surface_triples", lambda: self.triples_surface(transcripts))
+        # Each count rides a write the run does anyway. A resumed run skips
+        # the surface write, so no action fires its observation: count the
+        # turns directly there instead of blocking on turns_obs.get.
+        turns_obs = Observation()
+        surface = _stage(
+            "stage/surface_triples",
+            lambda: self.triples_surface(
+                transcripts.observe(turns_obs, F.count(F.lit(1)).alias("n"))
+            ),
+        )
+        if "stage/surface_triples" in res.stages:
+            res.turns = int(turns_obs.get["n"])
+        else:
+            res.turns = transcripts.count()
+        meter.add(res.turns)
         links = _stage("stage/links", lambda: self.link_table(surface, alias_dict))
 
         t = time.time()
-        triples, unlinked = self.canonical_triples(
-            surface, links, same_as, checkpoint_dir=str(store.root / "_cc_snapshots")
-        )
+        triples, unlinked = self.canonical_triples(surface, links, same_as)
         triples = triples.cache()
         self._persisted.append(triples)
-        res.triples = triples.count()
-        meter.add(res.triples)
-        res.unlinked_mentions = unlinked.count()
         res.stages["canon"] = time.time() - t
 
         # -- materialize in tag/edge schema shape (G1/G2 analog) -----------
@@ -233,6 +243,7 @@ class TranscriptPipeline:
             )
         )
         store.merge_commit(entities, "tags/entity", Mode.INSERT, ["vid"])
+        tri_obs = Observation()
         edges = triples.select(
             F.col("subj").alias("src"),
             F.col("obj").alias("dst"),
@@ -240,15 +251,23 @@ class TranscriptPipeline:
             "pred",
             "conv_id",
             "turn_idx",
-        )
+        ).observe(tri_obs, F.count(F.lit(1)).alias("n"))
         store.merge_commit(edges, "edges/relation", Mode.INSERT, ["src", "dst", "rank", "pred", "conv_id", "turn_idx"])
-        if res.unlinked_mentions:
-            unlinked.write.mode("append").parquet(str(store.root / "_rejects" / "unlinked"))
+        res.triples = int(tri_obs.get["n"])
+        meter.add(res.triples)
+        # Rejects and metrics hold the latest run (overwrite, written even
+        # when empty), like the returned TranscriptRunResult: a rerun into
+        # the same output must not append a second copy.
+        unl_obs = Observation()
+        unlinked.observe(unl_obs, F.count(F.lit(1)).alias("n")).write.mode(
+            "overwrite"
+        ).parquet(str(store.root / "_rejects" / "unlinked"))
+        res.unlinked_mentions = int(unl_obs.get["n"])
         # per-partition lineage metrics (M1-M3 analog)
         pm = triples.groupBy(F.spark_partition_id().alias("partition")).agg(
             F.count("*").alias("rows")
         )
-        pm.write.mode("append").parquet(str(store.root / "_metrics" / "triples_by_partition"))
+        pm.write.mode("overwrite").parquet(str(store.root / "_metrics" / "triples_by_partition"))
         res.stages["materialize"] = time.time() - t
         res.duration_sec = time.time() - t0
         self.release()

@@ -384,3 +384,52 @@ sources:
     )
     assert out2.returncode == 2
     assert "error" in out2.stderr.lower()
+
+
+def _kg_cli(tmp_path, *args):
+    return subprocess.run(
+        [sys.executable, "-m", "nebula_importer_spark", "kg", *args,
+         "-o", str(tmp_path / "out"), "--master", "local[2]"],
+        capture_output=True, text=True, cwd=REPO, timeout=300,
+    )
+
+
+def test_cli_kg_input_requires_aliases(tmp_path):
+    """Real transcripts cannot link against the generated corpus's
+    dictionary: --input without --aliases fails before any work."""
+    out = _kg_cli(tmp_path, "--input", str(tmp_path / "t.parquet"))
+    assert out.returncode == 2
+    assert "--input needs --aliases" in out.stderr
+    assert not (tmp_path / "out").exists()
+
+
+def test_cli_kg_links_against_caller_dictionary(spark, tmp_path):
+    from pyspark.sql import functions as F
+
+    from nebula_importer_spark.plans.merge import TableStore
+    from nebula_importer_spark.transcripts.generate import gen_corpus_local
+
+    c = gen_corpus_local(seed=7, n_convs=3, turns_per_conv=6, mega_conv_turns=6)
+    d = c.to_spark(spark)
+
+    # entity ids no built-in dictionary produces: kind:cli_<name>
+    def own(col):
+        return F.regexp_replace(col, "^(\\w+):", "$1:cli_")
+
+    d["transcripts"].write.parquet(str(tmp_path / "t.parquet"))
+    d["alias_dict"].withColumn("entity_id", own("entity_id")).write.parquet(
+        str(tmp_path / "a.parquet"))
+    d["same_as"].select(own("entity_id").alias("entity_id"),
+                        own("dup_id").alias("dup_id")).write.parquet(
+        str(tmp_path / "s.parquet"))
+    out = _kg_cli(tmp_path, "--input", str(tmp_path / "t.parquet"),
+                  "--aliases", str(tmp_path / "a.parquet"),
+                  "--same-as", str(tmp_path / "s.parquet"))
+    assert out.returncode == 0, out.stderr[-2000:]
+    payload = json.loads(out.stdout[out.stdout.index("{"):])
+    assert payload["turns"] == len(c.transcripts)
+    assert payload["triples"] > 0
+    vids = [r["vid"] for r in
+            TableStore(tmp_path / "out" / "kg", spark).read("tags/entity").collect()]
+    assert vids and all(":cli_" in v for v in vids), vids
+    assert not [v for v in vids if v.endswith("__dup")], vids

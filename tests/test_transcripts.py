@@ -111,6 +111,88 @@ def test_end_to_end_materialization(spark, sdfs, tmp_path):
     # resume: re-run skips extraction/link stages
     res2 = pipe.run(sdfs["transcripts"], sdfs["alias_dict"], sdfs["same_as"], tmp_path, resume=True)
     assert res2.stages.get("stage/surface_triples") is None
+    # the skipped surface write carries no turn count: resume counts itself
+    assert res2.turns == res.turns
+    assert res2.triples == res.triples
+
+
+def _output_counts(spark, out) -> dict:
+    from nebula_importer_spark.plans.merge import TableStore
+
+    root = out / "kg"
+    store = TableStore(root, spark)
+    ent = store.read("tags/entity")
+    rel = store.read("edges/relation")
+    rel_key = ["src", "dst", "rank", "pred", "conv_id", "turn_idx"]
+    metrics = spark.read.parquet(str(root / "_metrics" / "triples_by_partition"))
+    return {
+        "entity_rows": ent.count(),
+        "entity_keys": ent.select("vid").distinct().count(),
+        "relation_rows": rel.count(),
+        "relation_keys": rel.select(*rel_key).distinct().count(),
+        "unlinked_rows": spark.read.parquet(str(root / "_rejects" / "unlinked")).count(),
+        "metric_partitions": metrics.count(),
+        "metric_rows": metrics.agg(F.sum("rows")).first()[0],
+    }
+
+
+def test_rerun_into_same_output_equals_one_run(spark, sdfs, tmp_path):
+    """A second run() into the same output leaves the tables, the unlinked
+    rejects and the partition metrics as one run left them."""
+    pipe = TranscriptPipeline(spark)
+    args = (sdfs["transcripts"], sdfs["alias_dict"], sdfs["same_as"], tmp_path)
+    res = pipe.run(*args)
+    once = _output_counts(spark, tmp_path)
+    assert once["unlinked_rows"] == res.unlinked_mentions > 0
+    assert once["relation_keys"] == once["relation_rows"] == res.triples
+    assert once["metric_rows"] == res.triples
+    res2 = pipe.run(*args)
+    assert _output_counts(spark, tmp_path) == once
+    assert (res2.turns, res2.triples, res2.unlinked_mentions) == (
+        res.turns, res.triples, res.unlinked_mentions
+    )
+
+
+def _job_names(sc, group: str) -> list[str]:
+    """Names of a job group's Spark jobs, as the UI names them: the name of
+    the job's last stage."""
+    st = sc.statusTracker()
+    names = []
+    for jid in st.getJobIdsForGroup(group):
+        stage = st.getStageInfo(max(st.getJobInfo(jid).stageIds))
+        names.append(stage.name)
+    return names
+
+
+def test_run_spark_job_guard(spark, sdfs, tmp_path, monkeypatch):
+    """run() carries its counts on the writes it does anyway (no count or
+    isEmpty actions) and canonicalizes on the driver in one Spark job."""
+    import nebula_importer_spark.transcripts.pipeline as kg_pipeline
+
+    sc = spark.sparkContext
+    group = f"kg-guard-{tmp_path.name}"
+    canonical_mapping = kg_pipeline.canonical_mapping
+
+    def grouped_canonical_mapping(*a, **k):
+        sc.setJobGroup(group + "-cc", "canonical_mapping")
+        try:
+            return canonical_mapping(*a, **k)
+        finally:
+            sc.setJobGroup(group, "run")
+
+    monkeypatch.setattr(kg_pipeline, "canonical_mapping", grouped_canonical_mapping)
+    sc.setJobGroup(group, "run")
+    try:
+        TranscriptPipeline(spark).run(
+            sdfs["transcripts"], sdfs["alias_dict"], sdfs["same_as"], tmp_path
+        )
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    names = _job_names(sc, group) + _job_names(sc, group + "-cc")
+    assert names, "no Spark jobs recorded for the run"
+    assert not [n for n in names if n.startswith(("count at", "isEmpty at"))], names
+    assert len(_job_names(sc, group + "-cc")) <= 1
 
 
 def test_extraction_coverage_keeps_zero_yield_convs(spark):
