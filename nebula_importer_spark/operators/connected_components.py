@@ -40,15 +40,7 @@ from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-
-def _fs_delete(spark, path: str) -> None:
-    """Delete a path through the Hadoop FileSystem API (works for local,
-    HDFS, s3a, ... — whatever the checkpoint dir lives on)."""
-    jvm = spark.sparkContext._jvm
-    conf = spark.sparkContext._jsc.hadoopConfiguration()
-    p = jvm.org.apache.hadoop.fs.Path(path)
-    fs = p.getFileSystem(conf)
-    fs.delete(p, True)
+from nebula_importer_spark.session import fs_delete
 
 
 def connected_components(
@@ -177,7 +169,7 @@ def connected_components(
         # snapshots from before this round are no longer read by any live
         # frame (labels/sym now read this round's files only)
         for s in range(1, first_retired + 1):
-            _fs_delete(spark, f"{root}/cc-{run}-{s:04d}")
+            fs_delete(spark, f"{root}/cc-{run}-{s:04d}")
 
     if not converged and strict:
         raise RuntimeError(
@@ -214,7 +206,7 @@ def connected_components(
         )
         prev_step = step[0]
         labels = mat(jumped.drop("_chg"))
-        _fs_delete(spark, f"{root}/cc-{run}-{prev_step:04d}")
+        fs_delete(spark, f"{root}/cc-{run}-{prev_step:04d}")
         if int(obs.get["chg"] or 0) == 0:
             break
     return labels

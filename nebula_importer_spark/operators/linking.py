@@ -1,17 +1,18 @@
 """Entity linking: broadcast exact join + MinHash-LSH fuzzy blocking.
 
-All JVM-side: shingling via SQL ``transform/sequence/substring``, minhash via
-K independent xxhash64 seeds aggregated in ONE shuffle (groupBy key, K min()
-aggregates — not K passes), banding by hashing R consecutive minhashes, and
-candidate verification with exact Jaccard on shingle arrays
-(array_intersect/array_union). No Python UDFs anywhere.
+All JVM-side: shingling via SQL ``transform/sequence/substring``, K
+minhashes as one array column (``array_min`` over K xxhash64 seeds of the
+shingle array — per-row expressions, no shuffle), banding by hashing R
+consecutive minhash slots, and candidate verification with exact Jaccard
+on shingle arrays (array_intersect/array_union). No Python UDFs and no
+persisted frames anywhere.
 
 Scale shape (the part that must survive 100×):
-- dictionary side is dimension-sized → ``F.broadcast`` for both the exact
-  join and the band join (bands of a 10^6-alias dict ≈ a few 10^6 rows —
-  still broadcastable; beyond that set broadcast_right=False and the band
-  join degrades gracefully to a shuffle equi-join on band_key, never to a
-  cross join).
+- dictionary side is dimension-sized → ``F.broadcast`` for the exact and
+  anti joins, the band join and the signature join (bands of a
+  10^6-alias dict ≈ a few 10^6 rows — still broadcastable; beyond that set
+  broadcast_right=False and the band join degrades gracefully to a shuffle
+  equi-join on band_key, never to a cross join).
 - mention side is deduplicated FIRST (distinct normalized surface forms):
   linking cost scales with |vocabulary|, not |corpus|.
 
@@ -77,46 +78,6 @@ def _with_shingles(df: DataFrame, text_col: str, n: int, mode: str = "char") -> 
     return df.withColumn("_shingles", F.array_distinct(arr))
 
 
-def _minhashes(df: DataFrame, key: str, num_hashes: int) -> DataFrame:
-    """K minhashes per row as pure array expressions — array_min over a
-    hashed transform of the shingle array. ZERO shuffle (the explode+groupBy
-    formulation shuffles |docs|×|shingles| rows; this touches none).
-
-    Built via SQL strings, NOT Python lambdas: PySpark deduplicates
-    higher-order-function lambdas by code object, so K structurally
-    identical ``lambda s, k=k: xxhash64(s, lit(k))`` closures all collapse
-    to the k=0 expression (verified on 4.1.2) — every signature slot came
-    out identical and LSH silently lost its seeds."""
-    cols = [
-        F.expr(f"array_min(transform(_shingles, s -> xxhash64(s, {k}L)))").alias(f"_mh{k}")
-        for k in range(num_hashes)
-    ]
-    return df.select(key, *cols)
-
-
-def _bands_of(mh: DataFrame, key: str, num_hashes: int, band_size: int) -> DataFrame:
-    n_bands = num_hashes // band_size
-    bands = F.array(
-        *[
-            F.xxhash64(
-                F.lit(b), *[F.col(f"_mh{b * band_size + r}") for r in range(band_size)]
-            )
-            for b in range(n_bands)
-        ]
-    )
-    return mh.select(key, F.posexplode(bands).alias("_band_idx", "_band_key"))
-
-
-def _est_jaccard(num_hashes: int, lpfx: str, rpfx: str):
-    """Minhash-estimated Jaccard: fraction of agreeing signature slots —
-    num_hashes integer comparisons, no array ops."""
-    matches = sum(
-        F.when(F.col(f"{lpfx}_mh{k}") == F.col(f"{rpfx}_mh{k}"), 1).otherwise(0)
-        for k in range(num_hashes)
-    )
-    return matches / F.lit(float(num_hashes))
-
-
 def jaccard(a, b):
     return F.size(F.array_intersect(a, b)) / F.size(F.array_union(a, b))
 
@@ -139,77 +100,76 @@ def minhash_lsh_join(
     """Approximate-similarity join: (left_key, right_key, jaccard) for pairs
     whose n-gram Jaccard ≥ threshold AND that collide in ≥1 LSH band.
 
-    Three-stage funnel (cost drops an order of magnitude per stage):
-      1. band join      — equality on hashed minhash bands (shuffle equi-join)
-      2. estimate filter— minhash-estimated Jaccard from the signatures
-                          already in hand (num_hashes integer compares;
-                          cutoff threshold - est_margin) — kills the false
-                          candidates low-selectivity corpora produce WITHOUT
-                          touching shingle arrays
-      3. exact verify   — array_intersect/array_union Jaccard on survivors
+    Each side is ONE signature frame: key, distinct shingles and ``_mh``,
+    the array of ``num_hashes`` minhashes. Three joins, the right side
+    broadcast in two:
+      1. band join  — every ``band_size`` consecutive ``_mh`` slots hash to
+                      a band key; equality on (band, key), then distinct
+                      (left, right) candidates
+      2. one signature join per side, then the estimate filter (equal
+         ``_mh`` slots / K ≥ threshold - est_margin — kills the false
+         candidates low-selectivity corpora produce before any array set
+         operation) and exact Jaccard (array_intersect/array_union)
+    Nothing is persisted: the signatures are per-row maps, cheaper to
+    recompute per plan branch than a cached frame's extra job and scans.
+    A self-join (``right is left``) builds one side and renames it.
 
     Recall follows the LSH s-curve P(collide) = 1-(1-s^band_size)^n_bands;
     with 12 hashes in bands of 2: s=0.5 → ~0.90, s=0.7 → ~0.99. The estimate
     filter's false-negative rate at margin 0.25 is the binomial tail
     P(Binom(K, s) < K·(threshold-margin)) — negligible for s ≥ threshold.
+
+    The minhashes are SQL strings, NOT Python lambdas: PySpark deduplicates
+    higher-order-function lambdas by code object, so K structurally
+    identical ``lambda s, k=k: xxhash64(s, lit(k))`` closures all collapse
+    to the k=0 expression (verified on 4.1.2) — every signature slot came
+    out identical and LSH silently lost its seeds.
     """
-    lk, rk = "_lk", "_rk"
-    # The shingle and signature frames feed three plan subtrees each (bands,
-    # estimate filter, verify); persist so shingling runs once per side, not
-    # three times. Both are bounded: ids + shingle arrays / K longs per row.
-    # Self-joins (right is left) prepare ONE side and alias it — half the
-    # shingling/minhash work.
     self_join = right is left and right_key != left_key
     # shingling/minhash are CPU-bound per-row expressions: spread a
     # few-split input across the cluster first (no-op at scale)
     left = spread_small_input(left)
     right = left if self_join else spread_small_input(right)
-    l_sh = _with_shingles(
-        left.select(F.col(left_key).alias(lk), F.col(left_text).alias("_lt")),
-        "_lt", shingle_n, shingle_mode,
-    ).persist()
-    l_mh = _minhashes(l_sh, lk, num_hashes).persist()
+    mh = F.array(*[
+        F.expr(f"array_min(transform(_shingles, s -> xxhash64(s, {k}L)))")
+        for k in range(num_hashes)
+    ])
+
+    def signatures(df: DataFrame, key: str, text: str, side: str) -> DataFrame:
+        sh = _with_shingles(
+            df.select(F.col(key).alias(f"_{side}k"), F.col(text).alias("_t")),
+            "_t", shingle_n, shingle_mode,
+        )
+        return sh.select(f"_{side}k", F.col("_shingles").alias(f"_{side}sh"), mh.alias(f"_{side}mh"))
+
+    def bands(sig: DataFrame, side: str) -> DataFrame:
+        slot = F.col(f"_{side}mh")
+        keys = F.array(*[
+            F.xxhash64(F.lit(b), *[slot[b * band_size + r] for r in range(band_size)])
+            for b in range(num_hashes // band_size)
+        ])
+        return sig.select(f"_{side}k", F.posexplode(keys).alias("_band_idx", "_band_key"))
+
+    l_sig = signatures(left, left_key, left_text, "l")
     if self_join:
-        r_sh = l_sh.withColumnRenamed(lk, rk)
-        r_mh = l_mh.withColumnRenamed(lk, rk)
+        r_sig = l_sig.toDF("_rk", "_rsh", "_rmh")
     else:
-        r_sh = _with_shingles(
-            right.select(F.col(right_key).alias(rk), F.col(right_text).alias("_rt")),
-            "_rt", shingle_n, shingle_mode,
-        ).persist()
-        r_mh = _minhashes(r_sh, rk, num_hashes).persist()
-    l_bands = _bands_of(l_mh, lk, num_hashes, band_size)
-    r_bands = _bands_of(r_mh, rk, num_hashes, band_size)
+        r_sig = signatures(right, right_key, right_text, "r")
+    r_bands = bands(r_sig, "r")
     if broadcast_right:
-        r_bands = F.broadcast(r_bands)
-    cand = l_bands.join(r_bands, on=["_band_idx", "_band_key"]).select(lk, rk).distinct()
-
-    # stage 2: estimate filter on signatures (cheap integer compares)
-    l_sig = l_mh.select(lk, *[F.col(f"_mh{k}").alias(f"_l_mh{k}") for k in range(num_hashes)])
-    r_sig = r_mh.select(rk, *[F.col(f"_mh{k}").alias(f"_r_mh{k}") for k in range(num_hashes)])
-    if broadcast_right:
-        r_sig = F.broadcast(r_sig)
-    est = _est_jaccard(num_hashes, "_l", "_r")
-    cand = (
-        cand.join(l_sig, lk)
-        .join(r_sig, rk)
-        .filter(est >= F.lit(max(threshold - est_margin, 0.0)))
-        .select(lk, rk)
-    )
-
-    # stage 3: exact verification on shingle arrays
-    l_arr = l_sh.select(lk, F.col("_shingles").alias("_lsh"))
-    r_arr = r_sh.select(rk, F.col("_shingles").alias("_rsh"))
-    if broadcast_right:
-        r_arr = F.broadcast(r_arr)
-    verified = (
-        cand.join(l_arr, lk)
-        .join(r_arr, rk)
-        .select(lk, rk, jaccard(F.col("_lsh"), F.col("_rsh")).alias("jaccard"))
+        r_bands, r_sig = F.broadcast(r_bands), F.broadcast(r_sig)
+    cand = bands(l_sig, "l").join(r_bands, ["_band_idx", "_band_key"]).select("_lk", "_rk").distinct()
+    same_slots = F.expr("size(filter(zip_with(_lmh, _rmh, (a, b) -> a = b), x -> x))")
+    return (
+        cand.join(l_sig, "_lk")
+        .join(r_sig, "_rk")
+        .filter(same_slots / F.lit(float(num_hashes)) >= F.lit(max(threshold - est_margin, 0.0)))
+        .select(
+            F.col("_lk").alias(left_key),
+            F.col("_rk").alias(right_key),
+            jaccard(F.col("_lsh"), F.col("_rsh")).alias("jaccard"),
+        )
         .filter(F.col("jaccard") >= threshold)
-    )
-    return verified.select(
-        F.col(lk).alias(left_key), F.col(rk).alias(right_key), "jaccard"
     )
 
 
@@ -220,7 +180,6 @@ def link_mentions(
     alias_col: str = "alias_norm",
     entity_col: str = "entity_id",
     fuzzy_threshold: float = 0.5,
-    track: list | None = None,
 ) -> DataFrame:
     """Resolve distinct mention surface forms against the alias dictionary.
 
@@ -229,20 +188,19 @@ def link_mentions(
     entity_id) on fuzzy. Mentions matching nothing are absent from the output
     (callers route them to rejects).
 
-    ``track``: optional list the persisted vocabulary frame is appended to —
-    the caller unpersists after its consuming actions (cached blocks must
-    not accumulate across runs in a long-lived session).
+    The distinct mention vocabulary meets the broadcast dictionary three
+    times: an inner join (exact links), a left-anti join (the mentions no
+    alias spells exactly; they go to minhash_lsh_join) and the entity
+    lookup of the fuzzy pairs. Nothing is persisted: each branch plans its
+    own vocabulary distinct, and Spark reuses the dictionary's distinct
+    shuffle across all of them.
     """
-    # The distinct vocabulary feeds three plan subtrees (exact join, anti
-    # join, fuzzy LSH); persist so the corpus-wide distinct shuffle runs
-    # once, not three times (measured 3× the stage cost on a 5M-turn run).
-    m = mentions.select(mention_col).distinct().persist()
-    if track is not None:
-        track.append(m)
+    m = mentions.select(mention_col).distinct()
     d = alias_dict.select(alias_col, entity_col).distinct()
+    on_alias = m[mention_col] == d[alias_col]
 
     exact = (
-        m.join(F.broadcast(d), m[mention_col] == d[alias_col], "inner")
+        m.join(F.broadcast(d), on_alias, "inner")
         .groupBy(mention_col)
         .agg(F.min(entity_col).alias(entity_col))
         .select(
@@ -252,7 +210,7 @@ def link_mentions(
             F.lit(1.0).alias("score"),
         )
     )
-    unmatched = m.join(exact.select(mention_col), mention_col, "left_anti")
+    unmatched = m.join(F.broadcast(d), on_alias, "left_anti")
     fuzzy_pairs = minhash_lsh_join(
         unmatched,
         d,
@@ -373,7 +331,7 @@ def fuzzy_join_editdist(
 
     ``max_dist`` is capped at 2 — beyond that the variant blow-up
     (C(len,3) ≈ len³/6 rows per string) wants a different algorithm
-    (the minhash_lsh_join funnel), and the cap keeps the contract honest.
+    (minhash_lsh_join), and the cap keeps the contract honest.
 
     Returns ``(left_id, right_id, left_text, right_text, dist)`` with
     ``dist <= max_dist``. Reference analog: none — nebula-importer's only

@@ -21,7 +21,9 @@ from __future__ import annotations
 import contextlib
 import logging
 import re
+import tempfile
 import time
+import uuid
 from pathlib import Path
 
 from pyspark.sql import DataFrame, Observation, SparkSession
@@ -53,6 +55,7 @@ from nebula_importer_spark.functions.filter_dsl import compile_filter
 from nebula_importer_spark.functions.picker import compile_id, compile_prop, compile_rank
 from nebula_importer_spark.plans.merge import TableStore
 from nebula_importer_spark.plans.metrics import ElementStats, RunResult, StatsMeter
+from nebula_importer_spark.session import fs_delete
 
 ARROW_BATCH_KEY = "spark.sql.execution.arrow.maxRecordsPerBatch"
 
@@ -127,17 +130,25 @@ class Pipeline:
         # sources/reader.py) — pass a shared-filesystem path on a cluster.
         self.staging_dir = staging_dir
         self._scans: dict[int, tuple[DataFrame, DataFrame]] = {}
+        # each scan's own dir under staging_dir (or a temp dir): everything
+        # read_source writes for it — the staged CSV, a remote download
+        self._stage_dirs: dict[int, str] = {}
 
     # -- scans -------------------------------------------------------------
     def _scan(self, i: int, spec: SourceSpec) -> tuple[DataFrame, DataFrame]:
         if i not in self._scans:
+            if self.staging_dir is None:
+                stage = tempfile.mkdtemp(prefix="nispark-stage-")
+            else:
+                stage = f"{self.staging_dir.rstrip('/')}/source-{i}-{uuid.uuid4().hex[:8]}"
+            self._stage_dirs[i] = stage
             # read_source stages the parsed CSV scan once: a single pass
             # over the raw text feeds every tag/edge projection plus the
             # rejects split (G7). readerConcurrency caps its parallelism.
             self._scans[i] = read_source(
                 self.spark,
                 spec,
-                self.staging_dir,
+                stage,
                 reader_concurrency=self.config.reader_concurrency,
             )
         return self._scans[i]
@@ -218,7 +229,12 @@ class Pipeline:
     # -- full run ------------------------------------------------------------
     def run(self, out_dir: str | Path, resume: bool = False) -> RunResult:
         """Materialize all tags+edges into <out_dir>/<space>; write rejects +
-        per-file lineage metrics; resumable per (source, element) stage."""
+        per-file lineage metrics; resumable per (source, element) stage.
+
+        Without ``resume`` the rejects and metrics hold this run only; with
+        it, those of the completed stages are kept. The scans this run
+        staged (and their remote downloads) are deleted when it returns or
+        raises; scans staged earlier by a library read stay."""
         from nebula_importer_spark.logging_util import build_logger
 
         t0 = time.time()
@@ -241,20 +257,30 @@ class Pipeline:
         for hook in self.config.before_hooks:  # W6 before-hooks
             self._run_hook(hook)
 
-        # M2: periodic records/s + active-task meter (reference statsInterval)
-        meter = StatsMeter(self.spark, interval_sec=self.config.stats_interval_sec)
-        meter.start()
-        try:
-            for i, src in enumerate(self.config.sources):
-                with _arrow_batch_override(self.spark, src.batch):
-                    self._run_source(
-                        i, src, store, result, rejects_dir, mpath, resume, meter
-                    )
-        finally:
-            meter.stop()
+        if not resume:
+            # rejects and metrics are appended stage by stage: clear what
+            # an earlier run into this output left
+            for p in (*(rejects_dir / k for k in ("csv", "tag", "edge")), mpath):
+                fs_delete(self.spark, str(p))
 
-        for hook in self.config.after_hooks:  # W6 after-hooks
-            self._run_hook(hook)
+        staged_before = set(self._scans)
+        try:
+            # M2: periodic records/s + active-task meter (reference statsInterval)
+            with StatsMeter(self.spark, interval_sec=self.config.stats_interval_sec) as meter:
+                for i, src in enumerate(self.config.sources):
+                    with _arrow_batch_override(self.spark, src.batch):
+                        self._run_source(
+                            i, src, store, result, rejects_dir, mpath, resume, meter
+                        )
+
+            for hook in self.config.after_hooks:  # W6 after-hooks
+                self._run_hook(hook)
+        finally:
+            # forget and delete the scans this run staged: a later read
+            # stages the source again
+            for i in set(self._scans) - staged_before:
+                del self._scans[i]
+                fs_delete(self.spark, self._stage_dirs.pop(i))
 
         result.metrics_path = str(mpath)
         result.rejects_path = str(rejects_dir)

@@ -84,3 +84,13 @@ def get_spark(
     for k, v in (extra_conf or {}).items():
         b = b.config(k, v)
     return b.getOrCreate()
+
+
+def fs_delete(spark: SparkSession, path: str) -> None:
+    """Recursively delete a path through the Hadoop FileSystem API (works
+    for local, HDFS, s3a, ... — whatever filesystem the path names). A
+    missing path is a no-op."""
+    jvm = spark.sparkContext._jvm
+    conf = spark.sparkContext._jsc.hadoopConfiguration()
+    p = jvm.org.apache.hadoop.fs.Path(path)
+    p.getFileSystem(conf).delete(p, True)

@@ -455,5 +455,6 @@ def resolve_remote(spark: SparkSession, spec, staging_dir: str | None = None) ->
         opts = getattr(spec, attr, None)
         if opts is not None:
             dest = staging_dir or tempfile.mkdtemp(prefix="nispark-remote-")
+            Path(dest).mkdir(parents=True, exist_ok=True)
             return opts.download(dest)
     return spec.path

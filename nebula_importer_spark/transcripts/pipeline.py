@@ -109,10 +109,7 @@ class TranscriptPipeline:
         aliases = alias_dict.select(
             normalize_mention(F.col("alias")).alias("alias_norm"), "entity_id"
         )
-        return link_mentions(
-            mentions, aliases, fuzzy_threshold=self.fuzzy_threshold,
-            track=self._persisted,
-        )
+        return link_mentions(mentions, aliases, fuzzy_threshold=self.fuzzy_threshold)
 
     def canonical_triples(
         self,

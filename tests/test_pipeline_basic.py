@@ -203,3 +203,95 @@ def test_csv_scan_plan_has_no_exchange(spark):
     with contextlib.redirect_stdout(buf):
         df.explain("formatted")
     assert "Exchange" not in buf.getvalue()
+
+
+def _staged(stage: Path) -> list[str]:
+    return sorted(p.name for p in stage.iterdir())
+
+
+def test_run_removes_the_scans_it_staged(spark, tmp_path):
+    """run() deletes the staging dirs of the scans it created, never the
+    caller's staging_dir itself, and keeps a scan a library read staged
+    before it. Later reads stage the source again."""
+    stage = tmp_path / "stage"
+    p = Pipeline(_config(), spark, staging_dir=str(stage))
+    assert p.vertices("Person").count() == 5  # stages source 0 only
+    before = _staged(stage)
+    assert len(before) == 1
+    res = p.run(tmp_path / "out")
+    assert not res.is_failed()
+    assert _staged(stage) == before
+    assert {(r["src"], r["dst"]) for r in p.edges("KNOWS").collect()} == {
+        ("101", "102"), ("101", "103"), ("102", "104"), ("104", "105")
+    }
+    assert len(_staged(stage)) == 2  # source 1 staged again
+
+
+def test_failing_after_hook_removes_staged_scans(spark, tmp_path):
+    import pytest
+
+    from nebula_importer_spark.config.model import HookSpec
+    from nebula_importer_spark.plans.pipeline import HookError
+
+    cfg = _config()
+    cfg.after_hooks = [HookSpec(statements=["SELEC BROKEN SYNTAX"])]
+    stage = tmp_path / "stage"
+    p = Pipeline(cfg, spark, staging_dir=str(stage))
+    with pytest.raises(HookError):
+        p.run(tmp_path / "out")
+    assert stage.is_dir() and _staged(stage) == []
+    assert p.vertices("Person").count() == 5  # re-staged, not a deleted scan
+
+
+def _import_outputs(spark, out: Path, res) -> dict:
+    from nebula_importer_spark.plans.merge import TableStore
+
+    space = out / "s"
+
+    def rows(path: Path) -> list[str]:
+        if not path.exists():
+            return []
+        return sorted(str(r) for r in spark.read.parquet(str(path)).collect())
+
+    store = TableStore(space, spark)
+    return {
+        "rejects": {k: rows(space / "_rejects" / k) for k in ("csv", "tag", "edge")},
+        "metrics": rows(space / "_metrics"),
+        "elements": [
+            (e.kind, e.name, e.total, e.filtered, e.written, e.rejected)
+            for e in res.elements
+        ],
+        "csv_rejects": res.csv_rejects,
+        "keys": {
+            "tags/t": store.read("tags/t").select("vid").distinct().count(),
+            "edges/e": store.read("edges/e").select("src", "dst", "rank").distinct().count(),
+        },
+    }
+
+
+def test_rerun_into_same_output_equals_one_run(spark, tmp_path):
+    """A second run() (no resume) into the same output leaves the rejects,
+    the lineage metrics, the element stats and the tables as one run left
+    them; a resumed run keeps what the completed stages wrote."""
+    src = tmp_path / "people.csv"
+    src.write_text('1,Ada\n2,Alan\nx,NoId\n"broken,row\n3,Kurt\n')
+    int_id = NodeIDSpec(type="INT", index=0)
+    cfg = GraphConfig(
+        space="s",
+        sources=[
+            SourceSpec(
+                path=str(src),
+                tags=[NodeSpec("t", int_id, [PropSpec("v", "STRING", 1)])],
+                edges=[EdgeSpec("e", src=int_id, dst=int_id, props=[])],
+            )
+        ],
+    )
+    out = tmp_path / "out"
+    once = _import_outputs(spark, out, Pipeline(cfg, spark).run(out))
+    assert all(once["rejects"].values()), once["rejects"]
+    assert once["metrics"] and once["keys"] == {"tags/t": 3, "edges/e": 3}
+    twice = _import_outputs(spark, out, Pipeline(cfg, spark).run(out))
+    assert twice == once
+    resumed = Pipeline(cfg, spark).run(out, resume=True)
+    assert resumed.elements == []
+    assert _import_outputs(spark, out, resumed) == {**once, "elements": []}

@@ -142,9 +142,8 @@ def _join_keys(plan: str, join: str) -> list[str]:
 def test_dimension_joins_broadcast(spark):
     """Every join against the (small) alias dictionary — the exact match,
     the fuzzy candidates' dictionary signatures and the entity lookup — is
-    a broadcast. The only shuffled joins are the mention vocabulary's joins
-    with itself, keyed on the mention, and no join degenerates to a
-    cartesian product. Size-based broadcasting is switched off, so only the
+    a broadcast. The only shuffled joins are keyed on the mention side, no
+    join degenerates to a cartesian product, and nothing is cached. Size-based broadcasting is switched off, so only the
     explicit broadcast hints count."""
     mentions = spark.createDataFrame(
         [("acme corp",), ("acme corpp",), ("initech",), ("nobody",)],
@@ -156,15 +155,13 @@ def test_dimension_joins_broadcast(spark):
     )
     threshold = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    track: list = []
     try:
-        plan = _plan(link_mentions(mentions, aliases, track=track))
+        plan = _plan(link_mentions(mentions, aliases))
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", threshold)
-        for df in track:
-            df.unpersist()
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" not in plan
+    assert "InMemoryRelation" not in plan and "InMemoryTableScan" not in plan
     broadcast = _join_keys(plan, "BroadcastHashJoin")
     assert any("alias_norm" in k for k in broadcast), broadcast
     assert len(broadcast) >= 4, broadcast

@@ -195,6 +195,44 @@ def test_run_spark_job_guard(spark, sdfs, tmp_path, monkeypatch):
     assert len(_job_names(sc, group + "-cc")) <= 1
 
 
+def _cache_state(spark) -> tuple[bool, int]:
+    """(no DataFrame is cached, number of persisted RDDs) of the session."""
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    return cache.isEmpty(), spark.sparkContext._jsc.getPersistentRDDs().size()
+
+
+def test_runs_leave_no_cached_data(spark, sdfs, tmp_path):
+    """run(), triples_set() and an available-now incremental run leave
+    nothing cached: in a long-lived session every run's blocks would
+    otherwise pile up."""
+    from nebula_importer_spark.streaming.transcripts import (
+        read_transcript_stream,
+        run_incremental_kg,
+    )
+
+    spark.catalog.clearCache()
+    empty, rdds = _cache_state(spark)
+    assert empty
+    args = (sdfs["transcripts"], sdfs["alias_dict"], sdfs["same_as"])
+    TranscriptPipeline(spark).run(*args, tmp_path / "run")
+    assert _cache_state(spark) == (True, rdds)
+    assert TranscriptPipeline(spark).triples_set(*args)
+    assert _cache_state(spark) == (True, rdds)
+    indir = tmp_path / "in"
+    sdfs["transcripts"].withColumn(
+        "ts", F.to_timestamp(F.lit("2026-01-01 00:00:00"))
+    ).coalesce(1).write.parquet(str(indir))
+    res = run_incremental_kg(
+        read_transcript_stream(spark, str(indir)),
+        sdfs["alias_dict"],
+        tmp_path / "stream",
+        tmp_path / "ckpt",
+        available_now=True,
+    )
+    assert res["batches"] >= 1
+    assert _cache_state(spark) == (True, rdds)
+
+
 def test_extraction_coverage_keeps_zero_yield_convs(spark):
     from nebula_importer_spark.transcripts.pipeline import extraction_coverage
 
