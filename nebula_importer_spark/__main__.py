@@ -106,11 +106,12 @@ def _cmd_statements(args: argparse.Namespace) -> int:
         targets = [(k, n) for k, n in targets if n == args.element]
         if not targets:
             raise ConfigError(f"element {args.element!r} not in config")
-    for kind, name in targets:
-        df = p.statements(name, batch=args.batch, kind=kind)
-        path = f"{args.output}/{kind}s/{name}.ngql"
-        df.select("statement").write.mode("overwrite").text(path)
-        print(f"{kind} {name}: statements written to {path}/")
+    with p:  # close() deletes the scans the reads staged
+        for kind, name in targets:
+            df = p.statements(name, batch=args.batch, kind=kind)
+            path = f"{args.output}/{kind}s/{name}.ngql"
+            df.select("statement").write.mode("overwrite").text(path)
+            print(f"{kind} {name}: statements written to {path}/")
     return 0
 
 

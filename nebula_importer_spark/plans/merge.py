@@ -33,9 +33,11 @@ analog). ``n_buckets`` defaults to 16 for the sandbox; size it so one bucket
 
 from __future__ import annotations
 
+import contextlib
 import json
 import os
 import shutil
+import threading
 import time
 from pathlib import Path
 
@@ -65,6 +67,9 @@ class TableStore:
         # write stage (None = whatever partitioning the plan produced)
         self.write_partitions = write_partitions
         self.root.mkdir(parents=True, exist_ok=True)
+        # Commits to different tables may run on different threads: every
+        # manifest read-modify-write holds this lock.
+        self._lock = threading.Lock()
 
     def _capped(self, df: DataFrame) -> DataFrame:
         if self.write_partitions is not None:
@@ -86,6 +91,15 @@ class TableStore:
         tmp.write_text(json.dumps(m, indent=2, sort_keys=True))
         os.replace(tmp, self._manifest_path())  # atomic snapshot commit
 
+    @contextlib.contextmanager
+    def _updating_manifest(self):
+        """Yield the current manifest under the store's lock and write it
+        back when the block completes."""
+        with self._lock:
+            m = self.read_manifest()
+            yield m
+            self._write_manifest(m)
+
     def current_version(self, table: str) -> int | None:
         t = self.read_manifest()["tables"].get(table)
         return None if t is None else t["version"]
@@ -94,9 +108,8 @@ class TableStore:
         return bool(self.read_manifest()["stages"].get(stage, {}).get("completed"))
 
     def mark_stage(self, stage: str, **info) -> None:
-        m = self.read_manifest()
-        m["stages"][stage] = {"completed": True, "at": time.time(), **info}
-        self._write_manifest(m)
+        with self._updating_manifest() as m:
+            m["stages"][stage] = {"completed": True, "at": time.time(), **info}
 
     # -- reads ------------------------------------------------------------
     def _bucket_map(self, entry: dict, version: int) -> dict[str, int] | None:
@@ -158,42 +171,43 @@ class TableStore:
         back), so a version dir stays partially alive while any retained
         snapshot references one of its buckets. Returns deleted paths.
         Time travel to an expired version raises (map no longer recorded)."""
-        m = self.read_manifest()
-        entry = m["tables"].get(table)
-        if entry is None:
-            return []
-        history = entry.get("history", [])
-        kept_hist = history[-keep:] if keep > 0 else []
-        if "buckets" in entry:
-            live: set[tuple[int, int]] = set()
-            for bmap in [entry["buckets"], *[h["buckets"] for h in kept_hist]]:
-                live |= {(int(v), int(b)) for b, v in bmap.items()}
-            doomed = [
-                str(bdir)
-                for vdir in (self.root / table).glob("v=*")
-                for bdir in vdir.glob(f"{BUCKET_COL}=*")
-                if (
-                    int(vdir.name.split("=", 1)[1]),
-                    int(bdir.name.split("=", 1)[1]),
-                )
-                not in live
-            ]
-        else:
-            live_v = {entry["version"]} | {h["version"] for h in kept_hist}
-            doomed = [
-                str(vdir)
-                for vdir in (self.root / table).glob("v=*")
-                if int(vdir.name.split("=", 1)[1]) not in live_v
-            ]
-        for p in doomed:
-            shutil.rmtree(p, ignore_errors=True)
-        # drop now-empty version dirs so the layout stays readable
-        for vdir in (self.root / table).glob("v=*"):
-            if not any(vdir.iterdir()):
-                vdir.rmdir()
-        entry["history"] = kept_hist
-        self._write_manifest(m)
-        return doomed
+        with self._lock:
+            m = self.read_manifest()
+            entry = m["tables"].get(table)
+            if entry is None:
+                return []
+            history = entry.get("history", [])
+            kept_hist = history[-keep:] if keep > 0 else []
+            if "buckets" in entry:
+                live: set[tuple[int, int]] = set()
+                for bmap in [entry["buckets"], *[h["buckets"] for h in kept_hist]]:
+                    live |= {(int(v), int(b)) for b, v in bmap.items()}
+                doomed = [
+                    str(bdir)
+                    for vdir in (self.root / table).glob("v=*")
+                    for bdir in vdir.glob(f"{BUCKET_COL}=*")
+                    if (
+                        int(vdir.name.split("=", 1)[1]),
+                        int(bdir.name.split("=", 1)[1]),
+                    )
+                    not in live
+                ]
+            else:
+                live_v = {entry["version"]} | {h["version"] for h in kept_hist}
+                doomed = [
+                    str(vdir)
+                    for vdir in (self.root / table).glob("v=*")
+                    if int(vdir.name.split("=", 1)[1]) not in live_v
+                ]
+            for p in doomed:
+                shutil.rmtree(p, ignore_errors=True)
+            # drop now-empty version dirs so the layout stays readable
+            for vdir in (self.root / table).glob("v=*"):
+                if not any(vdir.iterdir()):
+                    vdir.rmdir()
+            entry["history"] = kept_hist
+            self._write_manifest(m)
+            return doomed
 
     def versions(self, table: str) -> list[int]:
         entry = self.read_manifest()["tables"].get(table)
@@ -225,8 +239,7 @@ class TableStore:
     def commit(self, df: DataFrame, table: str) -> int:
         """Unkeyed full-snapshot commit (stage checkpoints): write a new
         immutable snapshot and advance the manifest pointer."""
-        m = self.read_manifest()
-        prev_entry = m["tables"].get(table, {})
+        prev_entry = self.read_manifest()["tables"].get(table, {})
         prev = prev_entry.get("version", 0)
         v = prev + 1
         out = self.root / table / f"v={v}"
@@ -234,8 +247,8 @@ class TableStore:
         history = prev_entry.get("history", [])
         if prev:
             history = history + [{"version": prev}]
-        m["tables"][table] = {"version": v, "history": history}
-        self._write_manifest(m)
+        with self._updating_manifest() as m:
+            m["tables"][table] = {"version": v, "history": history}
         return v
 
     def merge_commit(
@@ -255,8 +268,7 @@ class TableStore:
 
         Returns (new_version, unmatched_update_count).
         """
-        m = self.read_manifest()
-        entry = m["tables"].get(table)
+        entry = self.read_manifest()["tables"].get(table)
         # An existing table's bucketing is frozen at creation (a different
         # pmod would route keys past their live rows and corrupt the merge);
         # self.n_buckets only sizes NEW tables.
@@ -290,12 +302,12 @@ class TableStore:
             incoming = incoming.persist()
             try:
                 return self._merge_live(
-                    m, entry, table, mode, key_cols, incoming, cur_map, prev_v, nb
+                    entry, table, mode, key_cols, incoming, cur_map, prev_v, nb
                 )
             finally:
                 incoming.unpersist()
         return self._merge_live(
-            m, entry, table, mode, key_cols, incoming, cur_map, prev_v, nb
+            entry, table, mode, key_cols, incoming, cur_map, prev_v, nb
         )
 
     def _table_columns(self, entry: dict | None, table: str) -> list[str] | None:
@@ -315,7 +327,7 @@ class TableStore:
         return cols
 
     def _merge_live(
-        self, m, entry, table, mode, key_cols, incoming, cur_map, prev_v, nb
+        self, entry, table, mode, key_cols, incoming, cur_map, prev_v, nb
     ) -> tuple[int, int]:
         unmatched = 0
         table_cols = self._table_columns(entry, table)
@@ -331,9 +343,11 @@ class TableStore:
             str(self.root / table / f"v={cur_map[str(b)]}" / f"{BUCKET_COL}={b}")
             for b in touched_live
         ]
+        # read on the incoming frame's session, whose conf (a source's own
+        # Arrow batch) the commit's write then runs under
         current = (
             self._with_bucket(
-                self.spark.read.option("mergeSchema", "true")
+                incoming.sparkSession.read.option("mergeSchema", "true")
                 .parquet(*slice_paths)
                 .drop(BUCKET_COL),
                 key_cols,
@@ -424,19 +438,19 @@ class TableStore:
             history = history + [
                 {"version": prev_v, "buckets": dict(cur_map)}
             ]
-        m = self.read_manifest()
-        m["tables"][table] = {
-            "version": v,
-            "buckets": new_map,
-            "n_buckets": nb,
-            # full-table column set: union of what was known with what this
-            # commit wrote (a widening INSERT extends it; UPDATE/DELETE keep
-            # it) — the UPDATE validation source, bucket-independent
-            "columns": sorted(
-                set(table_cols or [])
-                | {c for c in state.columns if c != BUCKET_COL}
-            ),
-            "history": history,
-        }
-        self._write_manifest(m)
+        with self._updating_manifest() as m:
+            m["tables"][table] = {
+                "version": v,
+                "buckets": new_map,
+                "n_buckets": nb,
+                # full-table column set: union of what was known with what
+                # this commit wrote (a widening INSERT extends it;
+                # UPDATE/DELETE keep it) — the UPDATE validation source,
+                # bucket-independent
+                "columns": sorted(
+                    set(table_cols or [])
+                    | {c for c in state.columns if c != BUCKET_COL}
+                ),
+                "history": history,
+            }
         return v, unmatched

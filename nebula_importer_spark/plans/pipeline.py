@@ -8,26 +8,37 @@ filter + select of Column expressions (no per-row code), modes materialized
 through the snapshot TableStore, rejects + per-file lineage metrics written
 per run.
 
+``run()`` submits its independent Spark jobs from driver threads at once,
+as the reference runs its reader and importer goroutine pools
+(pkg/manager/manager.go:23-27): phase 1 stages every source, phase 2 runs
+one chain per target table. Inside a chain, elements commit in config
+order, so a later source wins on a shared key and each table has a single
+writer. A failing stage's error is raised after the stages in flight have
+finished.
+
 Library surface (entry point 3 analog, reference pkg/manager/manager.go:68-91):
 
-    p = Pipeline(cfg, spark)
-    p.vertices("Person")      # mapped vertex DF (vid, props...)
-    p.edges("KNOWS")          # mapped edge DF (src, dst, rank, props...)
-    result = p.run(out_dir)   # materialize everything + rejects + metrics
+    with Pipeline(cfg, spark) as p:   # close() deletes the staged scans
+        p.vertices("Person")      # mapped vertex DF (vid, props...)
+        p.edges("KNOWS")          # mapped edge DF (src, dst, rank, props...)
+        result = p.run(out_dir)   # materialize everything + rejects + metrics
 """
 
 from __future__ import annotations
 
-import contextlib
 import logging
 import re
 import tempfile
+import threading
 import time
 import uuid
+from concurrent.futures import ThreadPoolExecutor
+from functools import partial
 from pathlib import Path
 
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+from pyspark.util import inheritable_thread_target
 
 from nebula_importer_spark.config.model import (
     EdgeSpec,
@@ -56,31 +67,43 @@ from nebula_importer_spark.functions.picker import compile_id, compile_prop, com
 from nebula_importer_spark.plans.merge import TableStore
 from nebula_importer_spark.plans.metrics import ElementStats, RunResult, StatsMeter
 from nebula_importer_spark.session import fs_delete
+from nebula_importer_spark.sources.reader import FILE_COL, SEQ_COL, read_source
 
 ARROW_BATCH_KEY = "spark.sql.execution.arrow.maxRecordsPerBatch"
 
 
-@contextlib.contextmanager
-def _arrow_batch_override(spark: SparkSession, batch: int | None):
-    """Per-source Arrow batch override (S11, reference
+def _source_session(spark: SparkSession, batch: int) -> SparkSession:
+    """A session for one source's scan and stages: the caller's runtime SQL
+    conf plus the source's Arrow batch (S11, reference
     pkg/config/base/source.go:30-33: a source may override the manager
-    batch). Scoped to the source's stages; restores the session value."""
-    if batch is None:
-        yield
-        return
-    try:
-        old = spark.conf.get(ARROW_BATCH_KEY)
-    except Exception:  # pragma: no cover — key unset
-        old = None
-    spark.conf.set(ARROW_BATCH_KEY, str(batch))
-    try:
-        yield
-    finally:
-        if old is None:
-            spark.conf.unset(ARROW_BATCH_KEY)
-        else:
-            spark.conf.set(ARROW_BATCH_KEY, old)
-from nebula_importer_spark.sources.reader import FILE_COL, SEQ_COL, read_source
+    batch). Its own session, so sources staged at once do not see each
+    other's batch and the caller's session is never changed."""
+    s = spark.newSession()
+    for k, v in spark.conf.getAll.items():
+        if s.conf.get(k, None) != v and s.conf.isModifiable(k):
+            s.conf.set(k, v)
+    s.conf.set(ARROW_BATCH_KEY, str(batch))
+    return s
+
+
+def _run_all(spark: SparkSession, tasks: list) -> list:
+    """Run ``tasks`` (no-argument callables) on driver threads at once and
+    return their results in task order. Each Spark job a task submits is
+    small, so their overlap is what fills the cores. Local properties (job
+    group, tags) reach the threads. The first error in task order is raised
+    only after every task has finished, so no task outlives the call."""
+    if not tasks:
+        return []
+    wrap = inheritable_thread_target(spark)
+    workers = min(len(tasks), spark.sparkContext.defaultParallelism)
+    with ThreadPoolExecutor(max_workers=workers) as pool:
+        futures = [pool.submit(wrap(t)) for t in tasks]
+    # leaving the block waited for every task
+    for f in futures:
+        if f.exception() is not None:
+            raise f.exception()
+    return [f.result() for f in futures]
+
 
 VID = "vid"
 SRC = "src"
@@ -145,13 +168,34 @@ class Pipeline:
             # read_source stages the parsed CSV scan once: a single pass
             # over the raw text feeds every tag/edge projection plus the
             # rejects split (G7). readerConcurrency caps its parallelism.
+            # A source with its own batch is scanned on its own session,
+            # which every frame built on the scan carries.
             self._scans[i] = read_source(
-                self.spark,
+                self.spark
+                if spec.batch is None
+                else _source_session(self.spark, spec.batch),
                 spec,
                 stage,
                 reader_concurrency=self.config.reader_concurrency,
             )
         return self._scans[i]
+
+    def _drop_scans(self, sources) -> None:
+        """Forget and delete the scans of ``sources``: a later read stages
+        the source again."""
+        for i in sources:
+            self._scans.pop(i, None)
+            fs_delete(self.spark, self._stage_dirs.pop(i))
+
+    def close(self) -> None:
+        """Delete every scan this Pipeline staged, library reads' included."""
+        self._drop_scans(list(self._stage_dirs))
+
+    def __enter__(self) -> "Pipeline":
+        return self
+
+    def __exit__(self, *exc) -> None:
+        self.close()
 
     # -- library reads (no side effects) ------------------------------------
     def vertices(self, tag: str) -> DataFrame:
@@ -231,6 +275,17 @@ class Pipeline:
         """Materialize all tags+edges into <out_dir>/<space>; write rejects +
         per-file lineage metrics; resumable per (source, element) stage.
 
+        The independent work runs at once, in two phases (the reference's
+        reader/importer goroutine pools, pkg/manager/manager.go:23-27):
+        first every source is staged, with its CSV rejects written; then
+        one chain per target table (``tags/<name>``, ``edges/<name>``)
+        runs. A chain commits its elements in config order, so a later
+        source's rows win over an earlier one's on the same key and an
+        UPDATE-then-INSERT on one table keeps its order. ``result.elements``
+        is in config order. If a stage fails, the first error (in source or
+        chain order) is raised once every stage already running has
+        finished; the stages that completed stay recorded for ``resume``.
+
         Without ``resume`` the rejects and metrics hold this run only; with
         it, those of the completed stages are kept. The scans this run
         staged (and their remote downloads) are deleted when it returns or
@@ -247,6 +302,13 @@ class Pipeline:
         result = RunResult(space=self.config.space)
         rejects_dir = Path(out_dir) / self.config.space / "_rejects"
         mpath = Path(out_dir) / self.config.space / "_metrics"
+        # Stages append rows into these shared dirs. Two appends into one
+        # parquet dir at once share its _temporary/0 and lose rows, so each
+        # dir takes one writer at a time.
+        appends = {
+            p: threading.Lock()
+            for p in (*(rejects_dir / k for k in ("csv", "tag", "edge")), mpath)
+        }
         log.info(
             "import start: space=%s sources=%d out=%s",
             self.config.space,
@@ -260,27 +322,53 @@ class Pipeline:
         if not resume:
             # rejects and metrics are appended stage by stage: clear what
             # an earlier run into this output left
-            for p in (*(rejects_dir / k for k in ("csv", "tag", "edge")), mpath):
+            for p in appends:
                 fs_delete(self.spark, str(p))
 
-        staged_before = set(self._scans)
+        # one chain per target table: its elements (n, source, kind, spec),
+        # numbered in config order
+        chains: dict[str, list[tuple]] = {}
+        elements = (
+            (i, kind, spec)
+            for i, src in enumerate(self.config.sources)
+            for kind, specs in (("tag", src.tags), ("edge", src.edges))
+            for spec in specs
+        )
+        for n, (i, kind, spec) in enumerate(elements):
+            chains.setdefault(f"{kind}s/{spec.name}", []).append((n, i, kind, spec))
+
+        staged_before = set(self._stage_dirs)
         try:
             # M2: periodic records/s + active-task meter (reference statsInterval)
             with StatsMeter(self.spark, interval_sec=self.config.stats_interval_sec) as meter:
-                for i, src in enumerate(self.config.sources):
-                    with _arrow_batch_override(self.spark, src.batch):
-                        self._run_source(
-                            i, src, store, result, rejects_dir, mpath, resume, meter
+                staged = _run_all(
+                    self.spark,
+                    [
+                        partial(
+                            self._stage_source, i, src, store, appends, rejects_dir, resume
                         )
+                        for i, src in enumerate(self.config.sources)
+                    ],
+                )
+                result.csv_rejects = sum(staged)
+                done: dict[int, ElementStats] = {}
+                for chain_stats in _run_all(
+                    self.spark,
+                    [
+                        partial(
+                            self._run_chain, chain, store, appends, rejects_dir, mpath,
+                            resume, meter,
+                        )
+                        for chain in chains.values()
+                    ],
+                ):
+                    done.update(chain_stats)
+                result.elements = [done[n] for n in sorted(done)]
 
             for hook in self.config.after_hooks:  # W6 after-hooks
                 self._run_hook(hook)
         finally:
-            # forget and delete the scans this run staged: a later read
-            # stages the source again
-            for i in set(self._scans) - staged_before:
-                del self._scans[i]
-                fs_delete(self.spark, self._stage_dirs.pop(i))
+            self._drop_scans(set(self._stage_dirs) - staged_before)
 
         result.metrics_path = str(mpath)
         result.rejects_path = str(rejects_dir)
@@ -306,86 +394,94 @@ class Pipeline:
         )
         return result
 
-    def _run_source(
-        self, i, src, store, result, rejects_dir, mpath, resume, meter
-    ) -> None:
-        good, csv_rejects = self._scan(i, src)
+    def _stage_source(self, i, src, store, appends, rejects_dir, resume) -> int:
+        """Phase 1 of run(): stage source ``i`` and write its CSV rejects.
+        Returns the CSV reject count."""
+        _, csv_rejects = self._scan(i, src)
         # The rejects count rides the rejects write (observe — no standalone
         # .count() pass; at scale every extra count is a full scan of the
         # staged source). The write is a resumable stage of its own: a
         # resumed run must not append the same reject rows twice.
         rej_stage = f"s{i}/rejects"
-        if not (resume and store.stage_completed(rej_stage)):
-            rej_obs = Observation()
+        if resume and store.stage_completed(rej_stage):
+            return int(store.read_manifest()["stages"][rej_stage].get("rejected", 0))
+        rej_obs = Observation()
+        with appends[rejects_dir / "csv"]:
             csv_rejects.observe(
                 rej_obs, F.count(F.lit(1)).alias("n")
             ).write.mode("append").parquet(str(rejects_dir / "csv"))
-            n_rej = int(rej_obs.get["n"])
-            result.csv_rejects += n_rej
-            store.mark_stage(rej_stage, rejected=n_rej)
-        else:
-            result.csv_rejects += int(
-                store.read_manifest()["stages"][rej_stage].get("rejected", 0)
-            )
+        n_rej = int(rej_obs.get["n"])
+        store.mark_stage(rej_stage, rejected=n_rej)
+        return n_rej
 
-        for kind, specs in (("tag", src.tags), ("edge", src.edges)):
-            for spec in specs:
-                stage = f"s{i}/{kind}/{spec.name}/{spec.mode.value}"
-                if resume and store.stage_completed(stage):
-                    continue
-                es = ElementStats(name=spec.name, kind=kind, source=src.path)
-                # Both counters ride the merge-commit write action:
-                # pre-filter source rows (g_obs, below the element filter)
-                # and mapped/bad rows (m_obs) cost ZERO extra passes over
-                # the data (M1 analog).
-                g_obs = Observation()
-                src_rows = good.observe(g_obs, F.count(F.lit(1)).alias("n_src"))
-                if kind == "tag":
-                    mapped = map_node(src_rows, spec)  # type: ignore[arg-type]
-                    keys = [VID]
-                    table = f"tags/{spec.name}"
-                    null_key = F.col(VID).isNull()
-                else:
-                    mapped = map_edge(src_rows, spec)  # type: ignore[arg-type]
-                    keys = [SRC, DST, RANK]
-                    table = f"edges/{spec.name}"
-                    null_key = F.col(SRC).isNull() | F.col(DST).isNull()
-                m_obs = Observation()
-                mapped = mapped.observe(
-                    m_obs,
-                    F.count(F.lit(1)).alias("n_mapped"),
-                    F.sum(null_key.cast("long")).alias("n_bad"),
-                )
-                ok = mapped.filter(~null_key)
-                _, unmatched = store.merge_commit(ok, table, spec.mode, keys)
-                n_good = int(g_obs.get["n_src"])
-                n_mapped = int(m_obs.get["n_mapped"])
-                n_bad = int(m_obs.get["n_bad"] or 0)
-                es.total = n_good
-                es.filtered = n_good - n_mapped
-                if n_bad:
-                    bad = mapped.filter(null_key)
+    def _run_chain(
+        self, chain, store, appends, rejects_dir, mpath, resume, meter
+    ) -> dict[int, ElementStats]:
+        """Phase 2 of run(): commit the elements ``(n, source, kind, spec)``
+        of one target table, in order. Returns their stats by ``n``."""
+        done = {}
+        for n, i, kind, spec in chain:
+            stage = f"s{i}/{kind}/{spec.name}/{spec.mode.value}"
+            if resume and store.stage_completed(stage):
+                continue
+            src = self.config.sources[i]
+            good, _ = self._scan(i, src)
+            es = ElementStats(name=spec.name, kind=kind, source=src.path)
+            # Both counters ride the merge-commit write action:
+            # pre-filter source rows (g_obs, below the element filter)
+            # and mapped/bad rows (m_obs) cost ZERO extra passes over
+            # the data (M1 analog).
+            g_obs = Observation()
+            src_rows = good.observe(g_obs, F.count(F.lit(1)).alias("n_src"))
+            if kind == "tag":
+                mapped = map_node(src_rows, spec)  # type: ignore[arg-type]
+                keys = [VID]
+                table = f"tags/{spec.name}"
+                null_key = F.col(VID).isNull()
+            else:
+                mapped = map_edge(src_rows, spec)  # type: ignore[arg-type]
+                keys = [SRC, DST, RANK]
+                table = f"edges/{spec.name}"
+                null_key = F.col(SRC).isNull() | F.col(DST).isNull()
+            m_obs = Observation()
+            mapped = mapped.observe(
+                m_obs,
+                F.count(F.lit(1)).alias("n_mapped"),
+                F.sum(null_key.cast("long")).alias("n_bad"),
+            )
+            ok = mapped.filter(~null_key)
+            _, unmatched = store.merge_commit(ok, table, spec.mode, keys)
+            n_good = int(g_obs.get["n_src"])
+            n_mapped = int(m_obs.get["n_mapped"])
+            n_bad = int(m_obs.get["n_bad"] or 0)
+            es.total = n_good
+            es.filtered = n_good - n_mapped
+            if n_bad:
+                bad = mapped.filter(null_key)
+                with appends[rejects_dir / kind]:
                     bad.select(
                         F.col(FILE_COL),
                         F.col(SEQ_COL),
                         F.lit("null_key").alias("reason"),
                         F.to_json(F.struct(*[c for c in bad.columns])).alias("raw"),
                     ).write.mode("append").parquet(str(rejects_dir / kind))
-                n_ok = n_mapped - n_bad
-                # Per-file lineage metrics (M3 analog) written as a
-                # DataFrame — never .collect()ed: at 100 TB the file count
-                # is 10^5-10^6 rows, which belongs on disk, not in a
-                # driver-side Python list.
+            n_ok = n_mapped - n_bad
+            # Per-file lineage metrics (M3 analog) written as a
+            # DataFrame — never .collect()ed: at 100 TB the file count
+            # is 10^5-10^6 rows, which belongs on disk, not in a
+            # driver-side Python list.
+            with appends[mpath]:
                 ok.groupBy(FILE_COL).agg(F.count("*").alias("rows")).select(
                     F.lit(stage).alias("stage"),
                     F.col(FILE_COL).alias("file"),
                     "rows",
                 ).write.mode("append").parquet(str(mpath))
-                es.rejected = n_bad + unmatched
-                es.written = n_ok - unmatched
-                store.mark_stage(stage, written=es.written, rejected=es.rejected)
-                result.elements.append(es)
-                meter.add(es.written)
+            es.rejected = n_bad + unmatched
+            es.written = n_ok - unmatched
+            store.mark_stage(stage, written=es.written, rejected=es.rejected)
+            done[n] = es
+            meter.add(es.written)
+        return done
 
     def _run_hook(self, hook) -> None:
         """Pre/post hooks (W6). A failing statement ABORTS the run, matching

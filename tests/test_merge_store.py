@@ -199,3 +199,32 @@ def test_update_new_prop_on_untouched_bucket(spark, tmp_path):
         assert unmatched == 0
         got = {r["vid"]: r["age"] for r in store.read("tags/t").collect()}
         assert got[others[1]] == 77
+
+
+def test_concurrent_manifest_updates_lose_nothing(spark, tmp_path):
+    """Stages and commits of different tables update the manifest from
+    several threads: each read-modify-write holds the store's lock, so no
+    thread's update is overwritten by another's."""
+    import sys
+    import threading
+
+    store = TableStore(tmp_path / "s", spark)
+
+    def mark(t: int) -> None:
+        for k in range(25):
+            store.mark_stage(f"t{t}/{k}", written=k)
+
+    threads = [threading.Thread(target=mark, args=(t,)) for t in range(16)]
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        for th in threads:
+            th.start()
+        for th in threads:
+            th.join(timeout=60)
+    finally:
+        sys.setswitchinterval(interval)
+    assert not any(th.is_alive() for th in threads)
+    stages = store.read_manifest()["stages"]
+    assert len(stages) == 16 * 25
+    assert all(stages[f"t{t}/{k}"]["written"] == k for t in range(16) for k in range(25))

@@ -1,12 +1,12 @@
 """Periodic stats meter (M2, reference pkg/stats/stats.go:67-78 10s ticker)
-and the per-source Arrow batch override (S11)."""
+and the per-source Arrow batch (S11)."""
 
 from __future__ import annotations
 
 import time
 
 from nebula_importer_spark.plans.metrics import StatsMeter
-from nebula_importer_spark.plans.pipeline import ARROW_BATCH_KEY, _arrow_batch_override
+from nebula_importer_spark.plans.pipeline import ARROW_BATCH_KEY, _source_session
 
 
 def test_stats_meter_emits_interval_lines():
@@ -31,19 +31,27 @@ def test_stats_meter_reads_status_tracker(spark):
     assert any("activeStages=" in ln for ln in lines)
 
 
-def test_arrow_batch_override_scopes_and_restores(spark):
-    spark.conf.set(ARROW_BATCH_KEY, "20000")
-    with _arrow_batch_override(spark, 512):
-        assert spark.conf.get(ARROW_BATCH_KEY) == "512"
-    assert spark.conf.get(ARROW_BATCH_KEY) == "20000"
-    # None → no-op
-    with _arrow_batch_override(spark, None):
-        assert spark.conf.get(ARROW_BATCH_KEY) == "20000"
+def test_source_session_carries_batch_and_caller_conf(spark):
+    """A batch source's session has its batch and the caller's runtime SQL
+    conf; the caller's session is not changed."""
+    key = "spark.sql.shuffle.partitions"
+    before = spark.conf.get(ARROW_BATCH_KEY), spark.conf.get(key)
+    spark.conf.set(key, "5")
+    try:
+        s = _source_session(spark, 512)
+        assert s is not spark
+        assert s.conf.get(ARROW_BATCH_KEY) == "512"
+        assert s.conf.get(key) == "5"
+        assert spark.conf.get(ARROW_BATCH_KEY) == before[0]
+    finally:
+        spark.conf.set(key, before[1])
 
 
 def test_source_batch_applied_during_run(spark, tmp_path):
     """SourceSpec.batch (reference pkg/config/base/source.go:30-33) must be
-    live while the source's stages execute and restored afterwards."""
+    live on the frames of that source's stages, and only there: a source
+    without a batch sees the default, and the caller's session never
+    changes while the sources run at once."""
     from nebula_importer_spark.config.model import (
         GraphConfig,
         NodeIDSpec,
@@ -54,27 +62,28 @@ def test_source_batch_applied_during_run(spark, tmp_path):
     from nebula_importer_spark.plans import pipeline as pl
 
     (tmp_path / "d.csv").write_text("a,1\nb,2\n")
-    cfg = GraphConfig(
-        space="s",
-        sources=[
-            SourceSpec(
-                path=str(tmp_path / "d.csv"),
-                batch=777,
-                tags=[
-                    NodeSpec(
-                        "t",
-                        NodeIDSpec(type="STRING", index=0),
-                        [PropSpec("v", "STRING", 1)],
-                    )
-                ],
-            )
-        ],
-    )
-    seen: list[str] = []
+
+    def source(tag, batch=None):
+        return SourceSpec(
+            path=str(tmp_path / "d.csv"),
+            batch=batch,
+            tags=[
+                NodeSpec(
+                    tag,
+                    NodeIDSpec(type="STRING", index=0),
+                    [PropSpec("v", "STRING", 1)],
+                )
+            ],
+        )
+
+    cfg = GraphConfig(space="s", sources=[source("t", 777), source("u")])
+    seen: dict[str, str] = {}
+    shared: list[str] = []
     orig = pl.TableStore.merge_commit
 
     def spy(self, df, table, mode, keys):
-        seen.append(spark.conf.get(pl.ARROW_BATCH_KEY))
+        seen[table] = df.sparkSession.conf.get(pl.ARROW_BATCH_KEY)
+        shared.append(spark.conf.get(pl.ARROW_BATCH_KEY))
         return orig(self, df, table, mode, keys)
 
     pl.TableStore.merge_commit = spy
@@ -83,7 +92,8 @@ def test_source_batch_applied_during_run(spark, tmp_path):
         pl.Pipeline(cfg, spark).run(tmp_path / "out")
     finally:
         pl.TableStore.merge_commit = orig
-    assert seen == ["777"]
+    assert seen == {"tags/t": "777", "tags/u": before}
+    assert shared == [before, before]
     assert spark.conf.get(pl.ARROW_BATCH_KEY) == before
 
 

@@ -10,10 +10,14 @@ from __future__ import annotations
 import datetime
 from pathlib import Path
 
+import pytest
+from pyspark.sql import functions as F
+
 from nebula_importer_spark.config.model import (
     CsvOptions,
     EdgeSpec,
     GraphConfig,
+    Mode,
     NodeIDSpec,
     NodeSpec,
     PropSpec,
@@ -295,3 +299,263 @@ def test_rerun_into_same_output_equals_one_run(spark, tmp_path):
     resumed = Pipeline(cfg, spark).run(out, resume=True)
     assert resumed.elements == []
     assert _import_outputs(spark, out, resumed) == {**once, "elements": []}
+
+
+# -- concurrent stages ---------------------------------------------------------
+# run() stages every source at once, then runs one chain per target table at
+# once; the fixture session is local[4], so these runs use several threads.
+
+INT_ID = NodeIDSpec(type="INT", index=0)
+
+
+def _csv(tmp_path: Path, name: str, text: str) -> str:
+    path = tmp_path / name
+    path.write_text(text)
+    return str(path)
+
+
+def _tag(name: str, *props: str, mode: Mode = Mode.INSERT) -> NodeSpec:
+    return NodeSpec(name, INT_ID, [PropSpec(p, "STRING", 1) for p in props], mode=mode)
+
+
+def _rows(df) -> list[tuple]:
+    return sorted(tuple(r) for r in df.collect())
+
+
+def _table_rows(spark, out: Path, table: str) -> list[tuple]:
+    from nebula_importer_spark.plans.merge import TableStore
+
+    df = TableStore(out / "s", spark).read(table)
+    return _rows(df.select(*sorted(df.columns)))
+
+
+def test_later_source_wins_on_shared_keys(spark, tmp_path):
+    """Two INSERT sources write one tag with overlapping keys: the chain for
+    that tag commits them in config order, so the later source's values
+    win, run after run."""
+    a = _csv(tmp_path, "a.csv", "1,a1\n2,a2\n3,a3\n")
+    b = _csv(tmp_path, "b.csv", "2,b2\n3,b3\n4,b4\n")
+    cfg = GraphConfig(
+        space="s",
+        sources=[
+            SourceSpec(path=a, tags=[_tag("t", "v"), _tag("ta", "v")]),
+            SourceSpec(path=b, tags=[_tag("t", "v"), _tag("tb", "v")]),
+        ],
+    )
+    for k in range(3):
+        out = tmp_path / f"out{k}"
+        res = Pipeline(cfg, spark).run(out)
+        assert _table_rows(spark, out, "tags/t") == [
+            ("a1", 1), ("b2", 2), ("b3", 3), ("b4", 4)
+        ]
+        assert [(Path(e.source).name, e.name) for e in res.elements] == [
+            ("a.csv", "t"), ("a.csv", "ta"), ("b.csv", "t"), ("b.csv", "tb")
+        ]
+
+
+def test_update_then_insert_chain_keeps_config_order(spark, tmp_path):
+    """INSERT, UPDATE, INSERT on one table from three sources: each commit
+    sees the one before it, as when the sources ran one after another."""
+    base = _csv(tmp_path, "base.csv", "1,x\n2,y\n3,z\n")
+    upd = _csv(tmp_path, "upd.csv", "2,Y\n9,Q\n")
+    ins = _csv(tmp_path, "ins.csv", "3,Z\n4,W\n")
+    cfg = GraphConfig(
+        space="s",
+        sources=[
+            SourceSpec(path=base, tags=[_tag("t", "v"), _tag("u", "v")]),
+            SourceSpec(path=upd, tags=[_tag("t", "v", mode=Mode.UPDATE)]),
+            SourceSpec(path=ins, tags=[_tag("t", "v"), _tag("w", "v")]),
+        ],
+    )
+    out = tmp_path / "out"
+    res = Pipeline(cfg, spark).run(out)
+    assert _table_rows(spark, out, "tags/t") == [
+        ("W", 4), ("Y", 2), ("Z", 3), ("x", 1)
+    ]
+    assert [(e.name, e.written, e.rejected) for e in res.elements] == [
+        ("t", 3, 0), ("u", 3, 0), ("t", 1, 1), ("t", 2, 0), ("w", 2, 0)
+    ]
+
+
+def test_tables_commit_on_several_threads(spark, tmp_path):
+    import threading
+
+    from nebula_importer_spark.plans import pipeline as pl
+
+    a = _csv(tmp_path, "a.csv", "1,a\n2,b\n")
+    b = _csv(tmp_path, "b.csv", "3,c\n4,d\n")
+    cfg = GraphConfig(
+        space="s",
+        sources=[
+            SourceSpec(path=a, tags=[_tag("t", "v"), _tag("u", "v")]),
+            SourceSpec(path=b, tags=[_tag("w", "v")]),
+        ],
+    )
+    threads: set[int] = set()
+    orig = pl.TableStore.merge_commit
+
+    def spy(self, df, table, mode, keys):
+        threads.add(threading.get_ident())
+        return orig(self, df, table, mode, keys)
+
+    pl.TableStore.merge_commit = spy
+    try:
+        res = Pipeline(cfg, spark).run(tmp_path / "out")
+    finally:
+        pl.TableStore.merge_commit = orig
+    assert [e.written for e in res.elements] == [2, 2, 2]
+    assert len(threads) >= 2
+    assert threading.get_ident() not in threads
+
+
+def _three_rejecting_sources(tmp_path: Path) -> GraphConfig:
+    """Three sources, each with a CSV reject, a null-key reject and its own
+    tag and edge tables."""
+    sources = []
+    for k in range(3):
+        path = _csv(
+            tmp_path,
+            f"p{k}.csv",
+            f'{k}1,A{k}\nx{k},NoId\n"broken{k},row\n{k}2,B{k}\n',
+        )
+        sources.append(
+            SourceSpec(
+                path=path,
+                tags=[_tag(f"t{k}", "v")],
+                edges=[EdgeSpec(f"e{k}", src=INT_ID, dst=INT_ID, props=[])],
+            )
+        )
+    return GraphConfig(space="s", sources=sources)
+
+
+def test_concurrent_appends_keep_every_row_once(spark, tmp_path):
+    cfg = _three_rejecting_sources(tmp_path)
+    out = tmp_path / "out"
+    res = Pipeline(cfg, spark).run(out)
+    space = out / "s"
+
+    def rows(sub: str, *cols: str) -> list[tuple]:
+        df = spark.read.parquet(str(space / sub))
+        return _rows(df.select(F.element_at(F.split("_file", "/"), -1), *cols))
+
+    assert res.csv_rejects == 3
+    assert rows("_rejects/csv", "raw") == [
+        (f"p{k}.csv", f'"broken{k},row') for k in range(3)
+    ]
+    for kind in ("tag", "edge"):
+        got = rows(f"_rejects/{kind}", "reason")
+        assert got == [(f"p{k}.csv", "null_key") for k in range(3)]
+    metrics = spark.read.parquet(str(space / "_metrics"))
+    assert _rows(
+        metrics.select("stage", F.element_at(F.split("file", "/"), -1), "rows")
+    ) == sorted(
+        (f"s{k}/{kind}/{kind[0]}{k}/INSERT", f"p{k}.csv", 2)
+        for k in range(3)
+        for kind in ("tag", "edge")
+    )
+    assert [(e.name, e.written, e.rejected) for e in res.elements] == [
+        (f"{kind[0]}{k}", 2, 1) for k in range(3) for kind in ("tag", "edge")
+    ]
+
+
+def _failing_update_config(tmp_path: Path, prop: str) -> GraphConfig:
+    """Chain tags/t: source 0 INSERTs it, source 1 UPDATEs ``prop``. The
+    other chains (tags/u, edges/e) are independent of it."""
+    a = _csv(tmp_path, "a.csv", '1,a\n2,b\nx,NoId\n"broken,row\n3,c\n')
+    b = _csv(tmp_path, "b.csv", "2,B\n7,Q\n")
+    return GraphConfig(
+        space="s",
+        sources=[
+            SourceSpec(
+                path=a,
+                tags=[_tag("t", "v")],
+                edges=[EdgeSpec("e", src=INT_ID, dst=INT_ID, props=[])],
+            ),
+            SourceSpec(
+                path=b,
+                tags=[_tag("t", prop, mode=Mode.UPDATE), _tag("u", "v")],
+            ),
+        ],
+    )
+
+
+def _outputs(spark, out: Path) -> dict:
+    space = out / "s"
+
+    def rows(path: Path) -> list[tuple]:
+        return _rows(spark.read.parquet(str(path))) if path.exists() else []
+
+    return {
+        "tables": {
+            t: _table_rows(spark, out, t) for t in ("tags/t", "tags/u", "edges/e")
+        },
+        "rejects": {k: rows(space / "_rejects" / k) for k in ("csv", "tag", "edge")},
+        "metrics": rows(space / "_metrics"),
+    }
+
+
+def test_failing_chain_raises_after_the_others_finish(spark, tmp_path):
+    """An UPDATE of an unknown prop fails chain tags/t. run() raises that
+    error once the other chains have finished, deletes its scans and keeps
+    the completed stages, and a resumed run with the prop fixed leaves what
+    one uninterrupted run leaves."""
+    import time
+
+    from nebula_importer_spark.plans import pipeline as pl
+    from nebula_importer_spark.plans.merge import TableStore
+
+    finished: dict[str, float] = {}
+    orig = pl.TableStore.merge_commit
+
+    def spy(self, df, table, mode, keys):
+        if table != "tags/t":
+            time.sleep(1.0)  # the other chains outlast the failing one
+        out = orig(self, df, table, mode, keys)
+        finished[table] = time.monotonic()
+        return out
+
+    stage = tmp_path / "stage"
+    out = tmp_path / "out"
+    pl.TableStore.merge_commit = spy
+    try:
+        with pytest.raises(ValueError, match="nope"):
+            Pipeline(
+                _failing_update_config(tmp_path, "nope"), spark, staging_dir=str(stage)
+            ).run(out)
+        raised = time.monotonic()
+    finally:
+        pl.TableStore.merge_commit = orig
+    assert set(finished) == {"tags/t", "tags/u", "edges/e"}
+    assert max(finished.values()) < raised
+    assert _staged(stage) == []
+    stages = TableStore(out / "s", spark).read_manifest()["stages"]
+    assert sorted(stages) == [
+        "s0/edge/e/INSERT", "s0/rejects", "s0/tag/t/INSERT",
+        "s1/rejects", "s1/tag/u/INSERT",
+    ]
+
+    fixed = _failing_update_config(tmp_path, "v")
+    resumed = Pipeline(fixed, spark).run(out, resume=True)
+    assert [(e.name, e.written, e.rejected) for e in resumed.elements] == [
+        ("t", 1, 1)
+    ]
+    whole = tmp_path / "whole"
+    Pipeline(fixed, spark).run(whole)
+    assert _outputs(spark, out) == _outputs(spark, whole)
+    assert _table_rows(spark, whole, "tags/t") == [("B", 2), ("a", 1), ("c", 3)]
+
+
+def test_close_deletes_the_scans_library_reads_staged(spark, tmp_path):
+    stage = tmp_path / "stage"
+    p = Pipeline(_config(), spark, staging_dir=str(stage))
+    assert p.vertices("Person").count() == 5
+    assert p.edges("KNOWS").count() == 4
+    assert len(_staged(stage)) == 2
+    p.close()
+    assert _staged(stage) == []
+    assert p.vertices("Person").count() == 5  # staged again
+    p.close()
+    with Pipeline(_config(), spark, staging_dir=str(stage)) as q:
+        assert q.statements("KNOWS").count() >= 1
+        assert len(_staged(stage)) == 1
+    assert _staged(stage) == []
