@@ -161,70 +161,36 @@ def _cmd_sniff(args: argparse.Namespace) -> int:
 
 
 def _cmd_validate(args: argparse.Namespace) -> int:
-    """Dry-run config validation: parse + compile every id/prop/rank/
-    filter to Column expressions WITHOUT reading any data — the CI
-    pre-flight the reference only provides implicitly by failing at
-    import time. Prints one line per element with the implied minimum
-    source width; exit 2 on any config/compile error."""
+    """Dry-run config validation: parse + compile every element through
+    the import's own mapping WITHOUT reading any data — the CI pre-flight
+    the reference only provides implicitly by failing at import time.
+    Each element is mapped over an empty all-string frame as wide as the
+    columns it reads (``config.model.element_columns``, filter refs
+    included). Prints one line per element with that minimum source
+    width; exit 2 on any config error."""
+    from nebula_importer_spark.config.model import element_columns
     from nebula_importer_spark.config.parse import load_config
-    from nebula_importer_spark.functions.filter_dsl import compile_filter
-    from nebula_importer_spark.functions.picker import (
-        compile_id,
-        compile_prop,
-        compile_rank,
-    )
+    from nebula_importer_spark.plans.pipeline import elements
     from nebula_importer_spark.session import get_spark
 
     cfg = load_config(args.config)
     # Column construction needs a JVM; a local[1] session is the dry-run
     # cost (no data is read)
-    get_spark("nebula-importer-validate", master=args.master or "local[1]")
+    spark = get_spark("nebula-importer-validate", master=args.master or "local[1]")
 
-    def _max_index(spec) -> int:
-        mx = -1
-        for p in getattr(spec, "props", []):
-            mx = max(mx, p.index if p.index is not None else -1,
-                     *(list(p.alternative_indices or []) or [-1]))
-        for idspec in filter(None, [getattr(spec, "id", None),
-                                    getattr(spec, "src", None),
-                                    getattr(spec, "dst", None)]):
-            if getattr(idspec, "index", None) is not None:
-                mx = max(mx, idspec.index)
-            for it in getattr(idspec, "concat_items", None) or []:
-                if isinstance(it, int):
-                    mx = max(mx, it)
-        r = getattr(spec, "rank_index", None)
-        if r is not None:
-            mx = max(mx, r)
-        return mx
-
-    n_elements = 0
-    for source in cfg.sources:
-        for kind, specs in (("tag", source.tags), ("edge", source.edges)):
-            for spec in specs:
-                width = _max_index(spec) + 1
-                cols = [f"_c{i}" for i in range(max(width, 1))]
-                if spec.filter:
-                    compile_filter(spec.filter, cols)
-                if kind == "tag":
-                    compile_id(spec.id, cols, "vid")
-                else:
-                    compile_id(spec.src, cols, "src")
-                    compile_id(spec.dst, cols, "dst")
-                    if spec.rank_index is not None:
-                        compile_rank(spec.rank_index, cols)
-                for p in spec.props:
-                    compile_prop(p, cols)
-                n_elements += 1
-                print(
-                    f"ok {kind} {spec.name}: source={source.path} "
-                    f"props={len(spec.props)} min_columns={width} "
-                    f"mode={getattr(getattr(spec, 'mode', None), 'value', 'INSERT')}"
-                    + (f" filter={spec.filter!r}" if spec.filter else "")
-                )
-    print(f"config valid: {len(cfg.sources)} sources, {n_elements} elements")
+    els = elements(cfg)
+    for el in els:
+        spec = el.spec
+        width = max((i for i, _ in element_columns(spec)), default=-1) + 1
+        schema = ", ".join(f"_c{i} string" for i in range(max(width, 1)))
+        el.map(spark.createDataFrame([], schema))
+        print(
+            f"ok {el.kind} {spec.name}: source={cfg.sources[el.source].path} "
+            f"props={len(spec.props)} min_columns={width} mode={spec.mode.value}"
+            + (f" filter={spec.filter!r}" if spec.filter else "")
+        )
+    print(f"config valid: {len(cfg.sources)} sources, {len(els)} elements")
     return 0
-
 
 
 def main(argv: list[str] | None = None) -> int:

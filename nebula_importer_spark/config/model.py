@@ -181,6 +181,29 @@ class EdgeSpec:
             seen.add(p.name)
 
 
+def element_columns(spec: NodeSpec | EdgeSpec) -> list[tuple[int, str]]:
+    """The ``(source column index, value type)`` pairs a tag/edge reads: its
+    id/src/dst ``index`` (INT for an INT id) and ``concatItems``, its rank
+    (INT), its props with their ``alternativeIndices``, and its filter's
+    ``Record[i]`` refs (STRING). Validate and fixture tooling size a source
+    from this list; the import compiles the same fields."""
+    from nebula_importer_spark.functions.filter_dsl import record_refs
+
+    ids = [spec.id] if isinstance(spec, NodeSpec) else [spec.src, spec.dst]
+    out: list[tuple[int, str]] = []
+    for i in ids:
+        if i.index is not None:
+            out.append((i.index, "INT" if i.type.upper() == "INT" else "STRING"))
+        out += [(c, "STRING") for c in i.concat_items if isinstance(c, int)]
+    if isinstance(spec, EdgeSpec) and spec.rank_index is not None:
+        out.append((spec.rank_index, "INT"))
+    for p in spec.props:
+        out += [(c, p.type.upper()) for c in (p.index, *p.alternative_indices)]
+    if spec.filter:
+        out += [(c, "STRING") for c in record_refs(spec.filter)]
+    return out
+
+
 @dataclass
 class CsvOptions:
     """CSV dialect. Reference pkg/source/config.go:16-21, pkg/reader/csv.go:33-91."""

@@ -528,6 +528,20 @@ def compile_filter(expr: str, cols: list[str]) -> Column:
     return F.expr(translate_filter(expr, cols))
 
 
+def record_refs(expr: str) -> list[int]:
+    """The ``i`` of every ``Record[i]`` in ``expr``, in order (a bare
+    ``Record`` reads whatever width the row has, so it adds none)."""
+    toks = _lex(expr)
+    return [
+        int(toks[k + 2][1])
+        for k in range(len(toks) - 3)
+        if toks[k] == ("ident", "Record")
+        and toks[k + 1] == ("op", "[")
+        and toks[k + 2][1].isdigit()
+        and toks[k + 3] == ("op", "]")
+    ]
+
+
 def validate_filter(expr: str) -> None:
     """Config-time validation without needing the source column list: full
     parse + type check with width checks deferred to compile time (when the

@@ -25,12 +25,10 @@ and non-ASCII UTF-8):
   id compilation.
 
 Scale note: this is the PARITY path — a Python stage (Arrow-batched,
-numpy-vectorized) in the id hot path. ``F.xxhash64`` remains the pure-JVM
-whole-stage-codegen alternative for pipelines that only need a
-deterministic 64-bit id, selected via ``hash_impl="xxhash64"`` on
-:func:`nebula_importer_spark.functions.picker.compile_id` (or
-``id.function: XXHASH64`` is intentionally NOT a config value — the config
-surface stays exactly the reference's, where only ``hash`` exists).
+numpy-vectorized) in the id hot path, and the only ``function: hash``
+implementation :func:`nebula_importer_spark.functions.picker.compile_id`
+has: the config surface stays exactly the reference's, where ``hash`` means
+the server's ``HASH()``.
 """
 
 from __future__ import annotations

@@ -23,8 +23,7 @@ Operator parity map:
   P8 type cast             → convert_type                  (converter_type.go:58-121)
   P9 HASH function         → nebula_hash (BIT-EXACT with the server-side
                              HASH() the reference's rendered text invokes:
-                             GCC std::hash, golden-tested vs g++; xxhash64
-                             available as the pure-JVM scale option)
+                             GCC std::hash, golden-tested vs g++)
                                                            (converter_function.go:21-33)
   P13 int-literal detect   → rlike UNSIGNED_INT_RE         (utils/string.go:5-48)
 """
@@ -68,21 +67,13 @@ def compile_prop(spec: PropSpec, cols: list[str]) -> Column:
     return convert_type(picked, spec.type).alias(spec.name)
 
 
-def compile_id(
-    spec: NodeIDSpec,
-    cols: list[str],
-    alias: str | None = None,
-    hash_impl: str = "nebula",
-) -> Column:
+def compile_id(spec: NodeIDSpec, cols: list[str], alias: str | None = None) -> Column:
     """NodeIDSpec → key Column (vid / src / dst).
 
-    ``hash_impl`` selects the ``function: hash`` implementation:
-    ``"nebula"`` (default) is BIT-EXACT with NebulaGraph's server-side
+    ``function: hash`` is BIT-EXACT with NebulaGraph's server-side
     ``HASH()`` (GCC std::hash — functions/nebula_hash.py, golden-tested
-    against a real g++ binary) so materialized vids equal what the
-    reference's rendered ``HASH("v")`` would produce on the server;
-    ``"xxhash64"`` is the pure-JVM whole-stage-codegen alternative for
-    pipelines that only need a deterministic 64-bit id at 100-TB scale."""
+    against a real g++ binary), so materialized vids equal what the
+    reference's rendered ``HASH("v")`` would produce on the server."""
     if spec.concat_items:
         # Mixed constants (str) and column indices (int) — reference
         # picker_concat.go:21-86. concat() is null-propagating like the
@@ -96,17 +87,9 @@ def compile_id(
     else:
         picked = _raw(cols, int(spec.index or 0))
     if spec.function and spec.function.upper() == "HASH":
-        if hash_impl == "nebula":
-            from nebula_importer_spark.functions.nebula_hash import nebula_hash
+        from nebula_importer_spark.functions.nebula_hash import nebula_hash
 
-            out = nebula_hash(picked)
-        elif hash_impl == "xxhash64":
-            out = F.xxhash64(picked)
-        else:
-            raise PickError(
-                f"unknown hash_impl {hash_impl!r}: use 'nebula' (bit-exact "
-                "server HASH) or 'xxhash64' (pure-JVM)"
-            )
+        out = nebula_hash(picked)
     elif spec.type.upper() == "INT":
         out = convert_type(picked, "INT")
     else:
@@ -114,6 +97,10 @@ def compile_id(
     return out.alias(alias or spec.name)
 
 
-def compile_rank(index: int, cols: list[str]) -> Column:
-    """Edge rank: INT-typed pick (reference pkg/spec/v3/rank.go:9-44)."""
+def compile_rank(index: int | None, cols: list[str]) -> Column:
+    """Edge rank: INT-typed pick (reference pkg/spec/v3/rank.go:9-44). With
+    no rank index it is 0: the rank is always part of the edge key
+    (reference pkg/spec/v3/edge.go: src->dst[@rank])."""
+    if index is None:
+        return F.lit(0).cast("long").alias("rank")
     return convert_type(_raw(cols, index), "INT").alias("rank")

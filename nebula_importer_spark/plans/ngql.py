@@ -224,7 +224,7 @@ def _render(
 def render_node_statements(
     mapped: DataFrame, spec: NodeSpec, batch: int = 128
 ) -> DataFrame:
-    """map_node output (vid + typed prop cols) → (statement, n_records)."""
+    """Tag ``Element.map`` output (vid + typed prop cols) → (statement, n_records)."""
     return _render(
         mapped,
         spec,
@@ -238,7 +238,7 @@ def render_node_statements(
 def render_edge_statements(
     mapped: DataFrame, spec: EdgeSpec, batch: int = 128
 ) -> DataFrame:
-    """map_edge output (src/dst/rank + typed prop cols) → (statement, n)."""
+    """Edge ``Element.map`` output (src/dst/rank + typed prop cols) → (statement, n)."""
     return _render(
         mapped, spec, _edge_key(spec), "EDGE", ("DELETE EDGE {name} ", ", "), batch
     )

@@ -27,16 +27,18 @@ Library surface (entry point 3 analog, reference pkg/manager/manager.go:68-91):
 from __future__ import annotations
 
 import logging
+import operator
 import re
 import tempfile
 import threading
 import time
 import uuid
 from concurrent.futures import ThreadPoolExecutor
-from functools import partial
+from dataclasses import dataclass
+from functools import partial, reduce
 from pathlib import Path
 
-from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.util import inheritable_thread_target
 
@@ -44,8 +46,8 @@ from nebula_importer_spark.config.model import (
     EdgeSpec,
     GraphConfig,
     HookSpec,
+    NodeIDSpec,
     NodeSpec,
-    SourceSpec,
 )
 
 
@@ -111,32 +113,59 @@ DST = "dst"
 RANK = "rank"
 
 
-def map_node(df: DataFrame, spec: NodeSpec) -> DataFrame:
-    """Tag mapping (G1): filter → id → ordered props. Lineage cols pass through."""
-    cols = [c for c in df.columns if c not in (FILE_COL, SEQ_COL)]
-    if spec.filter:
-        df = df.filter(compile_filter(spec.filter, cols))
-    exprs = [compile_id(spec.id, cols, VID)]
-    exprs += [compile_prop(p, cols) for p in spec.props]
-    exprs += [F.col(c) for c in (FILE_COL, SEQ_COL) if c in df.columns]
-    return df.select(*exprs)
+@dataclass(frozen=True)
+class Element:
+    """One tag/edge of source ``source``, compiled the one way ``run()``,
+    the library reads and ``validate`` use (G1/G2; the reference compiles
+    each element once at Validate() time, pkg/spec/v3/graph.go:50-72)."""
+
+    source: int
+    kind: str  # "tag" | "edge"
+    spec: NodeSpec | EdgeSpec
+
+    @property
+    def ids(self) -> list[tuple[str, NodeIDSpec]]:
+        """Key column name → the id spec it is compiled from."""
+        if self.kind == "tag":
+            return [(VID, self.spec.id)]
+        return [(SRC, self.spec.src), (DST, self.spec.dst)]
+
+    @property
+    def keys(self) -> list[str]:
+        """Merge keys: an edge's rank is part of its key (reference
+        pkg/spec/v3/edge.go: src->dst[@rank])."""
+        return [k for k, _ in self.ids] + ([RANK] if self.kind == "edge" else [])
+
+    @property
+    def table(self) -> str:
+        return f"{self.kind}s/{self.spec.name}"
+
+    def null_key(self) -> Column:
+        """A row with a null id: rejected by run(), left out by the reads."""
+        return reduce(operator.or_, [F.col(k).isNull() for k, _ in self.ids])
+
+    def map(self, df: DataFrame) -> DataFrame:
+        """filter → ids (and an edge's rank) → ordered props, over the
+        source's ``_c{i}`` columns. Lineage cols pass through."""
+        cols = [c for c in df.columns if c not in (FILE_COL, SEQ_COL)]
+        if self.spec.filter:
+            df = df.filter(compile_filter(self.spec.filter, cols))
+        exprs = [compile_id(spec, cols, k) for k, spec in self.ids]
+        if self.kind == "edge":
+            exprs.append(compile_rank(self.spec.rank_index, cols))
+        exprs += [compile_prop(p, cols) for p in self.spec.props]
+        exprs += [F.col(c) for c in (FILE_COL, SEQ_COL) if c in df.columns]
+        return df.select(*exprs)
 
 
-def map_edge(df: DataFrame, spec: EdgeSpec) -> DataFrame:
-    """Edge mapping (G2/G3): filter → src,dst,rank → props."""
-    cols = [c for c in df.columns if c not in (FILE_COL, SEQ_COL)]
-    if spec.filter:
-        df = df.filter(compile_filter(spec.filter, cols))
-    exprs = [compile_id(spec.src, cols, SRC), compile_id(spec.dst, cols, DST)]
-    if spec.rank_index is not None:
-        exprs.append(compile_rank(spec.rank_index, cols))
-    else:
-        # Rank defaults to 0 and is always part of the edge key
-        # (reference pkg/spec/v3/edge.go: src->dst[@rank]).
-        exprs.append(F.lit(0).cast("long").alias(RANK))
-    exprs += [compile_prop(p, cols) for p in spec.props]
-    exprs += [F.col(c) for c in (FILE_COL, SEQ_COL) if c in df.columns]
-    return df.select(*exprs)
+def elements(config: GraphConfig) -> list[Element]:
+    """Every tag/edge of ``config``, in config order."""
+    return [
+        Element(i, kind, spec)
+        for i, src in enumerate(config.sources)
+        for kind, specs in (("tag", src.tags), ("edge", src.edges))
+        for spec in specs
+    ]
 
 
 class Pipeline:
@@ -158,8 +187,10 @@ class Pipeline:
         self._stage_dirs: dict[int, str] = {}
 
     # -- scans -------------------------------------------------------------
-    def _scan(self, i: int, spec: SourceSpec) -> tuple[DataFrame, DataFrame]:
+    def _scan(self, i: int) -> tuple[DataFrame, DataFrame]:
+        """Source ``i``'s (good, rejects) frames, staged on first use."""
         if i not in self._scans:
+            spec = self.config.sources[i]
             if self.staging_dir is None:
                 stage = tempfile.mkdtemp(prefix="nispark-stage-")
             else:
@@ -198,39 +229,29 @@ class Pipeline:
         self.close()
 
     # -- library reads (no side effects) ------------------------------------
-    def vertices(self, tag: str) -> DataFrame:
-        """Union of every source's mapping for this tag; null vids excluded
-        (they are rejects in run())."""
-        parts = []
-        for i, s in enumerate(self.config.sources):
-            for t in s.tags:
-                if t.name == tag:
-                    good, _ = self._scan(i, s)
-                    parts.append(map_node(good, t).filter(F.col(VID).isNotNull()))
+    def _read(self, name: str, kinds: tuple[str, ...]) -> list[tuple[Element, DataFrame]]:
+        """Each element ``name`` of ``kinds`` mapped over its source's scan;
+        null keys are left out (they are rejects in run())."""
+        return [
+            (el, el.map(self._scan(el.source)[0]).filter(~el.null_key()))
+            for el in elements(self.config)
+            if el.kind in kinds and el.spec.name == name
+        ]
+
+    def _union(self, name: str, kind: str) -> DataFrame:
+        parts = [df for _, df in self._read(name, (kind,))]
         if not parts:
-            raise KeyError(f"tag {tag!r} not in config")
-        out = parts[0]
-        for p in parts[1:]:
-            out = out.unionByName(p, allowMissingColumns=True)
+            raise KeyError(f"{kind} {name!r} not in config")
+        out = reduce(partial(DataFrame.unionByName, allowMissingColumns=True), parts)
         return out.drop(FILE_COL, SEQ_COL)
 
+    def vertices(self, tag: str) -> DataFrame:
+        """Union of every source's mapping for this tag."""
+        return self._union(tag, "tag")
+
     def edges(self, edge: str) -> DataFrame:
-        parts = []
-        for i, s in enumerate(self.config.sources):
-            for e in s.edges:
-                if e.name == edge:
-                    good, _ = self._scan(i, s)
-                    parts.append(
-                        map_edge(good, e).filter(
-                            F.col(SRC).isNotNull() & F.col(DST).isNotNull()
-                        )
-                    )
-        if not parts:
-            raise KeyError(f"edge {edge!r} not in config")
-        out = parts[0]
-        for p in parts[1:]:
-            out = out.unionByName(p, allowMissingColumns=True)
-        return out.drop(FILE_COL, SEQ_COL)
+        """Union of every source's mapping for this edge."""
+        return self._union(edge, "edge")
 
     def statements(
         self, name: str, batch: int | None = None, kind: str | None = None
@@ -246,29 +267,18 @@ class Pipeline:
             render_node_statements,
         )
 
-        parts = []
-        for i, s in enumerate(self.config.sources):
-            b = batch or s.batch or self.config.batch
-            if kind in (None, "tag"):
-                for t in s.tags:
-                    if t.name == name:
-                        good, _ = self._scan(i, s)
-                        mapped = map_node(good, t).filter(F.col(VID).isNotNull())
-                        parts.append(render_node_statements(mapped, t, batch=b))
-            if kind in (None, "edge"):
-                for e in s.edges:
-                    if e.name == name:
-                        good, _ = self._scan(i, s)
-                        mapped = map_edge(good, e).filter(
-                            F.col(SRC).isNotNull() & F.col(DST).isNotNull()
-                        )
-                        parts.append(render_edge_statements(mapped, e, batch=b))
+        render = {"tag": render_node_statements, "edge": render_edge_statements}
+        parts = [
+            render[el.kind](
+                mapped,
+                el.spec,
+                batch=batch or self.config.sources[el.source].batch or self.config.batch,
+            )
+            for el, mapped in self._read(name, (kind,) if kind else ("tag", "edge"))
+        ]
         if not parts:
             raise KeyError(f"element {name!r} not in config")
-        out = parts[0]
-        for p in parts[1:]:
-            out = out.unionByName(p)
-        return out
+        return reduce(DataFrame.unionByName, parts)
 
     # -- full run ------------------------------------------------------------
     def run(self, out_dir: str | Path, resume: bool = False) -> RunResult:
@@ -325,17 +335,10 @@ class Pipeline:
             for p in appends:
                 fs_delete(self.spark, str(p))
 
-        # one chain per target table: its elements (n, source, kind, spec),
-        # numbered in config order
-        chains: dict[str, list[tuple]] = {}
-        elements = (
-            (i, kind, spec)
-            for i, src in enumerate(self.config.sources)
-            for kind, specs in (("tag", src.tags), ("edge", src.edges))
-            for spec in specs
-        )
-        for n, (i, kind, spec) in enumerate(elements):
-            chains.setdefault(f"{kind}s/{spec.name}", []).append((n, i, kind, spec))
+        # one chain per target table: its elements, numbered in config order
+        chains: dict[str, list[tuple[int, Element]]] = {}
+        for n, el in enumerate(elements(self.config)):
+            chains.setdefault(el.table, []).append((n, el))
 
         staged_before = set(self._stage_dirs)
         try:
@@ -344,10 +347,8 @@ class Pipeline:
                 staged = _run_all(
                     self.spark,
                     [
-                        partial(
-                            self._stage_source, i, src, store, appends, rejects_dir, resume
-                        )
-                        for i, src in enumerate(self.config.sources)
+                        partial(self._stage_source, i, store, appends, rejects_dir, resume)
+                        for i in range(len(self.config.sources))
                     ],
                 )
                 result.csv_rejects = sum(staged)
@@ -394,10 +395,10 @@ class Pipeline:
         )
         return result
 
-    def _stage_source(self, i, src, store, appends, rejects_dir, resume) -> int:
+    def _stage_source(self, i, store, appends, rejects_dir, resume) -> int:
         """Phase 1 of run(): stage source ``i`` and write its CSV rejects.
         Returns the CSV reject count."""
-        _, csv_rejects = self._scan(i, src)
+        _, csv_rejects = self._scan(i)
         # The rejects count rides the rejects write (observe — no standalone
         # .count() pass; at scale every extra count is a full scan of the
         # staged source). The write is a resumable stage of its own: a
@@ -417,32 +418,24 @@ class Pipeline:
     def _run_chain(
         self, chain, store, appends, rejects_dir, mpath, resume, meter
     ) -> dict[int, ElementStats]:
-        """Phase 2 of run(): commit the elements ``(n, source, kind, spec)``
-        of one target table, in order. Returns their stats by ``n``."""
+        """Phase 2 of run(): commit the elements ``(n, element)`` of one
+        target table, in order. Returns their stats by ``n``."""
         done = {}
-        for n, i, kind, spec in chain:
+        for n, el in chain:
+            i, kind, spec = el.source, el.kind, el.spec
             stage = f"s{i}/{kind}/{spec.name}/{spec.mode.value}"
             if resume and store.stage_completed(stage):
                 continue
             src = self.config.sources[i]
-            good, _ = self._scan(i, src)
+            good, _ = self._scan(i)
             es = ElementStats(name=spec.name, kind=kind, source=src.path)
             # Both counters ride the merge-commit write action:
             # pre-filter source rows (g_obs, below the element filter)
             # and mapped/bad rows (m_obs) cost ZERO extra passes over
             # the data (M1 analog).
             g_obs = Observation()
-            src_rows = good.observe(g_obs, F.count(F.lit(1)).alias("n_src"))
-            if kind == "tag":
-                mapped = map_node(src_rows, spec)  # type: ignore[arg-type]
-                keys = [VID]
-                table = f"tags/{spec.name}"
-                null_key = F.col(VID).isNull()
-            else:
-                mapped = map_edge(src_rows, spec)  # type: ignore[arg-type]
-                keys = [SRC, DST, RANK]
-                table = f"edges/{spec.name}"
-                null_key = F.col(SRC).isNull() | F.col(DST).isNull()
+            mapped = el.map(good.observe(g_obs, F.count(F.lit(1)).alias("n_src")))
+            null_key = el.null_key()
             m_obs = Observation()
             mapped = mapped.observe(
                 m_obs,
@@ -450,7 +443,7 @@ class Pipeline:
                 F.sum(null_key.cast("long")).alias("n_bad"),
             )
             ok = mapped.filter(~null_key)
-            _, unmatched = store.merge_commit(ok, table, spec.mode, keys)
+            _, unmatched = store.merge_commit(ok, el.table, spec.mode, el.keys)
             n_good = int(g_obs.get["n_src"])
             n_mapped = int(m_obs.get["n_mapped"])
             n_bad = int(m_obs.get["n_bad"] or 0)

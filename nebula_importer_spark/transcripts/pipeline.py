@@ -177,18 +177,7 @@ class TranscriptPipeline:
         t0 = time.time()
         store = TableStore(Path(out_dir) / "kg", self.spark)
         res = TranscriptRunResult()
-        meter = StatsMeter(self.spark, interval_sec=stats_interval_sec)
-        meter.start()
-        try:
-            return self._run_metered(
-                transcripts, alias_dict, same_as, store, res, resume, t0, meter
-            )
-        finally:
-            meter.stop()
 
-    def _run_metered(
-        self, transcripts, alias_dict, same_as, store, res, resume, t0, meter
-    ) -> TranscriptRunResult:
         def _stage(name: str, fn):
             def snapshot() -> str:
                 return str(store.root / name / f"v={store.current_version(name)}")
@@ -204,71 +193,78 @@ class TranscriptPipeline:
             # parquet footers would cost a Spark job per stage
             return self.spark.read.schema(df.schema).parquet(snapshot())
 
-        # Each count rides a write the run does anyway. A resumed run skips
-        # the surface write, so no action fires its observation: count the
-        # turns directly there instead of blocking on turns_obs.get.
-        turns_obs = Observation()
-        surface = _stage(
-            "stage/surface_triples",
-            lambda: self.triples_surface(
-                transcripts.observe(turns_obs, F.count(F.lit(1)).alias("n"))
-            ),
-        )
-        if "stage/surface_triples" in res.stages:
-            res.turns = int(turns_obs.get["n"])
-        else:
-            res.turns = transcripts.count()
-        meter.add(res.turns)
-        links = _stage("stage/links", lambda: self.link_table(surface, alias_dict))
-
-        t = time.time()
-        triples, unlinked = self.canonical_triples(surface, links, same_as)
-        triples = triples.cache()
-        self._persisted.append(triples)
-        res.stages["canon"] = time.time() - t
-
-        # -- materialize in tag/edge schema shape (G1/G2 analog) -----------
-        t = time.time()
-        entities = (
-            triples.select(F.col("subj").alias("vid"))
-            .unionByName(triples.select(F.col("obj").alias("vid")))
-            .distinct()
-            .select(
-                "vid",
-                F.regexp_extract("vid", r"^(\w+):", 1).alias("kind"),
-                F.regexp_extract("vid", r"^\w+:(.+?)(__dup)?$", 1).alias("name"),
+        with StatsMeter(self.spark, interval_sec=stats_interval_sec) as meter:
+            # Each count rides a write the run does anyway. A resumed run
+            # skips the surface write, so no action fires its observation:
+            # count the turns directly there instead of blocking on
+            # turns_obs.get.
+            turns_obs = Observation()
+            surface = _stage(
+                "stage/surface_triples",
+                lambda: self.triples_surface(
+                    transcripts.observe(turns_obs, F.count(F.lit(1)).alias("n"))
+                ),
             )
-        )
-        store.merge_commit(entities, "tags/entity", Mode.INSERT, ["vid"])
-        tri_obs = Observation()
-        edges = triples.select(
-            F.col("subj").alias("src"),
-            F.col("obj").alias("dst"),
-            F.lit(0).cast("long").alias("rank"),
-            "pred",
-            "conv_id",
-            "turn_idx",
-        ).observe(tri_obs, F.count(F.lit(1)).alias("n"))
-        store.merge_commit(edges, "edges/relation", Mode.INSERT, ["src", "dst", "rank", "pred", "conv_id", "turn_idx"])
-        res.triples = int(tri_obs.get["n"])
-        meter.add(res.triples)
-        # Rejects and metrics hold the latest run (overwrite, written even
-        # when empty), like the returned TranscriptRunResult: a rerun into
-        # the same output must not append a second copy.
-        unl_obs = Observation()
-        unlinked.observe(unl_obs, F.count(F.lit(1)).alias("n")).write.mode(
-            "overwrite"
-        ).parquet(str(store.root / "_rejects" / "unlinked"))
-        res.unlinked_mentions = int(unl_obs.get["n"])
-        # per-partition lineage metrics (M1-M3 analog)
-        pm = triples.groupBy(F.spark_partition_id().alias("partition")).agg(
-            F.count("*").alias("rows")
-        )
-        pm.write.mode("overwrite").parquet(str(store.root / "_metrics" / "triples_by_partition"))
-        res.stages["materialize"] = time.time() - t
-        res.duration_sec = time.time() - t0
-        self.release()
-        return res
+            if "stage/surface_triples" in res.stages:
+                res.turns = int(turns_obs.get["n"])
+            else:
+                res.turns = transcripts.count()
+            meter.add(res.turns)
+            links = _stage("stage/links", lambda: self.link_table(surface, alias_dict))
+
+            t = time.time()
+            triples, unlinked = self.canonical_triples(surface, links, same_as)
+            triples = triples.cache()
+            self._persisted.append(triples)
+            res.stages["canon"] = time.time() - t
+
+            # -- materialize in tag/edge schema shape (G1/G2 analog) -------
+            t = time.time()
+            entities = (
+                triples.select(F.col("subj").alias("vid"))
+                .unionByName(triples.select(F.col("obj").alias("vid")))
+                .distinct()
+                .select(
+                    "vid",
+                    F.regexp_extract("vid", r"^(\w+):", 1).alias("kind"),
+                    F.regexp_extract("vid", r"^\w+:(.+?)(__dup)?$", 1).alias("name"),
+                )
+            )
+            store.merge_commit(entities, "tags/entity", Mode.INSERT, ["vid"])
+            tri_obs = Observation()
+            edges = triples.select(
+                F.col("subj").alias("src"),
+                F.col("obj").alias("dst"),
+                F.lit(0).cast("long").alias("rank"),
+                "pred",
+                "conv_id",
+                "turn_idx",
+            ).observe(tri_obs, F.count(F.lit(1)).alias("n"))
+            store.merge_commit(
+                edges, "edges/relation", Mode.INSERT,
+                ["src", "dst", "rank", "pred", "conv_id", "turn_idx"],
+            )
+            res.triples = int(tri_obs.get["n"])
+            meter.add(res.triples)
+            # Rejects and metrics hold the latest run (overwrite, written
+            # even when empty), like the returned TranscriptRunResult: a
+            # rerun into the same output must not append a second copy.
+            unl_obs = Observation()
+            unlinked.observe(unl_obs, F.count(F.lit(1)).alias("n")).write.mode(
+                "overwrite"
+            ).parquet(str(store.root / "_rejects" / "unlinked"))
+            res.unlinked_mentions = int(unl_obs.get["n"])
+            # per-partition lineage metrics (M1-M3 analog)
+            pm = triples.groupBy(F.spark_partition_id().alias("partition")).agg(
+                F.count("*").alias("rows")
+            )
+            pm.write.mode("overwrite").parquet(
+                str(store.root / "_metrics" / "triples_by_partition")
+            )
+            res.stages["materialize"] = time.time() - t
+            res.duration_sec = time.time() - t0
+            self.release()
+            return res
 
     # -- evaluation ---------------------------------------------------------
     def triples_set(

@@ -120,7 +120,7 @@ def test_live_gxx_oracle():
 
 
 def test_hash_id_bit_exact_through_pipeline(spark):
-    """compile_id(function=HASH) default must emit server-parity vids."""
+    """compile_id(function=HASH) must emit server-parity vids."""
     from nebula_importer_spark.config.model import NodeIDSpec
     from nebula_importer_spark.functions.picker import compile_id
 
@@ -134,14 +134,6 @@ def test_hash_id_bit_exact_through_pipeline(spark):
         2004210728337488369,
         3115041758101068717,
     }
-    # the documented pure-JVM alternative still works and differs
-    alt = {
-        r["vid"]
-        for r in df.select(
-            compile_id(spec, df.columns, "vid", hash_impl="xxhash64")
-        ).collect()
-    }
-    assert len(alt) == 3 and alt != got
 
 
 def test_nebula_hash_column_nulls(spark):

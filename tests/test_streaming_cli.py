@@ -386,6 +386,35 @@ sources:
     assert "error" in out2.stderr.lower()
 
 
+def test_cli_validate_counts_filter_refs(tmp_path):
+    """A filter reading past every id/prop index widens the element: the
+    import runs this config over a 4-field CSV, so `validate` must accept
+    it and report 4 columns (it used to compile on a 2-column frame and
+    fail with a FilterError)."""
+    cfg = tmp_path / "cfg.yaml"
+    cfg.write_text(
+        """
+manager: {spaceName: vtest}
+sources:
+  - path: /nonexistent/never-read.csv
+    tags:
+      - name: person
+        id: {type: STRING, index: 0}
+        filter: 'Record[3] == "x"'
+        props:
+          - {name: name, type: STRING, index: 1}
+"""
+    )
+    out = subprocess.run(
+        [sys.executable, "-m", "nebula_importer_spark", "validate",
+         "-c", str(cfg)],
+        capture_output=True, text=True, cwd=REPO, timeout=300,
+    )
+    assert out.returncode == 0, out.stderr[-2000:]
+    assert "ok tag person" in out.stdout
+    assert "min_columns=4" in out.stdout
+
+
 def _kg_cli(tmp_path, *args):
     return subprocess.run(
         [sys.executable, "-m", "nebula_importer_spark", "kg", *args,

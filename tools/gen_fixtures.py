@@ -2,7 +2,8 @@
 
 Given a GraphConfig, derive — per source — the column count and the
 strictest value type each column must cast to (an index used as an INT id
-by one tag and a STRING prop by another must hold an int literal), then
+by one tag and a STRING prop by another must hold an int literal; a
+column only a filter reads counts toward the width as STRING), then
 write ``n_rows`` deterministic rows to each source's path. This lets the
 reference's download-your-own-data example configs (ldbc-snb) run
 end-to-end without any external data, and works for arbitrary user
@@ -18,7 +19,7 @@ from __future__ import annotations
 import sys
 from pathlib import Path
 
-from nebula_importer_spark.config.model import GraphConfig, NodeIDSpec, SourceSpec
+from nebula_importer_spark.config.model import GraphConfig, SourceSpec, element_columns
 
 # strictness order: later wins when two specs bind the same column.
 # Parameterized geography types (GEOGRAPHY(POINT) etc., all valid per
@@ -52,39 +53,13 @@ def _value(kind: str, row: int, col: int) -> str:
 
 
 def _columns(src: SourceSpec) -> dict[int, str]:
-    """column index → strictest required value type."""
+    """column index → strictest value type an element of ``src`` reads it as
+    (``element_columns``: ids, rank, props and filter refs)."""
     cols: dict[int, str] = {}
-
-    def need(i: int, kind: str) -> None:
-        kind = kind.upper()
-        cur = cols.get(i, "STRING")
-        if _ORDER.index(kind) >= _ORDER.index(cur):
-            cols[i] = kind
-
-    def need_id(spec: NodeIDSpec) -> None:
-        if spec.index is not None:
-            # a concat/plain STRING id col can hold anything; INT ids must
-            # parse as ints
-            need(spec.index, "INT" if spec.type.upper() == "INT" else "STRING")
-        for item in spec.concat_items:
-            if isinstance(item, int):
-                need(item, "STRING")
-
-    for t in src.tags:
-        need_id(t.id)
-        for p in t.props:
-            need(p.index, p.type)
-            for a in p.alternative_indices:
-                need(a, p.type)
-    for e in src.edges:
-        need_id(e.src)
-        need_id(e.dst)
-        if e.rank_index is not None:
-            need(e.rank_index, "INT")
-        for p in e.props:
-            need(p.index, p.type)
-            for a in p.alternative_indices:
-                need(a, p.type)
+    for spec in (*src.tags, *src.edges):
+        for i, kind in element_columns(spec):
+            if _ORDER.index(kind) >= _ORDER.index(cols.get(i, "STRING")):
+                cols[i] = kind
     return cols
 
 
