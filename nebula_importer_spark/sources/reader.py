@@ -25,7 +25,6 @@ load (statement order analog, reference pkg/reader/batch.go).
 
 from __future__ import annotations
 
-import tempfile
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
@@ -99,7 +98,7 @@ def _read_csv(spark: SparkSession, spec: SourceSpec, path: str) -> DataFrame:
 def read_source(
     spark: SparkSession,
     spec: SourceSpec,
-    staging_dir: str | None = None,
+    staging_dir: str,
     reader_concurrency: int | None = None,
 ) -> tuple[DataFrame, DataFrame]:
     """Scan one source → (good_rows, rejects).
@@ -114,8 +113,10 @@ def read_source(
     tag/edge projections fan out (G7), no executor-memory cache to evict at
     scale, and the staged reads are columnar with pushed-down filters. This
     also sidesteps Spark's refusal of plans whose only referenced file
-    column is the corrupt-record column. ``staging_dir`` should sit on the
-    job's shared filesystem for a cluster run; defaults to a local temp dir.
+    column is the corrupt-record column. ``staging_dir`` receives everything
+    the scan writes (the staged CSV, an FTP/SFTP download); the caller owns
+    it and deletes it. It should sit on the job's shared filesystem for a
+    cluster run.
     """
     # Remote blocks (S2-S7): apply per-source credential/endpoint conf and
     # resolve to a readable URI (FTP/SFTP: staged download) — see remote.py.
@@ -147,8 +148,7 @@ def read_source(
         SEQ_COL, F.monotonically_increasing_id()
     )
     if spec.format == "csv":
-        root = staging_dir or tempfile.mkdtemp(prefix="nispark-stage-")
-        path = f"{root}/scan-{uuid.uuid4().hex[:8]}"
+        path = f"{staging_dir}/scan-{uuid.uuid4().hex[:8]}"
         df.write.mode("overwrite").parquet(path)
         df = spark.read.parquet(path)
     data_cols = [c for c in df.columns if c not in (CORRUPT_COL, FILE_COL, SEQ_COL)]

@@ -441,10 +441,11 @@ def apply_hadoop_conf(spark: SparkSession, conf: dict[str, str]) -> None:
         hconf.set(k, v)
 
 
-def resolve_remote(spark: SparkSession, spec, staging_dir: str | None = None) -> str:
+def resolve_remote(spark: SparkSession, spec, staging_dir: str) -> str:
     """Resolve a SourceSpec's remote block (if any) to a readable URI,
-    applying credential conf / staging downloads as needed. Returns the
-    spec's plain path when no remote block is set."""
+    applying credential conf / staging downloads as needed. An FTP/SFTP
+    download lands in ``staging_dir``, which the caller owns and deletes.
+    Returns the spec's plain path when no remote block is set."""
     for attr in ("s3", "oss", "gcs", "hdfs"):
         opts = getattr(spec, attr, None)
         if opts is not None:
@@ -454,7 +455,6 @@ def resolve_remote(spark: SparkSession, spec, staging_dir: str | None = None) ->
     for attr in ("ftp", "sftp"):
         opts = getattr(spec, attr, None)
         if opts is not None:
-            dest = staging_dir or tempfile.mkdtemp(prefix="nispark-remote-")
-            Path(dest).mkdir(parents=True, exist_ok=True)
-            return opts.download(dest)
+            Path(staging_dir).mkdir(parents=True, exist_ok=True)
+            return opts.download(staging_dir)
     return spec.path

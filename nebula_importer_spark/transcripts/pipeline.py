@@ -1,6 +1,6 @@
 """End-to-end transcript → knowledge-graph pipeline (the north star).
 
-Stages (each a checkpointable snapshot in the TableStore):
+Stages (run() checkpoints 2 and 3 as TableStore snapshots):
 
 1. order     — stable turn ordering window over (conv_id, turn_idx)
 2. extract   — Arrow-batched mapInPandas triple extraction (surface forms),
@@ -22,6 +22,9 @@ Everything between parquet reads and writes is DataFrame expressions + one
 mapInPandas kernel; the only rows collected to the driver are the same_as
 pairs of stage 4. run()'s counts (turns, triples, unlinked mentions) are
 Observations riding the writes that already happen, not extra actions.
+The stages cache nothing: each materialize write re-runs the broadcast link
+joins over the parquet snapshots run() just wrote; a caller that reuses a
+stage output (the streaming micro-batch) persists it itself.
 """
 
 from __future__ import annotations
@@ -38,11 +41,7 @@ from nebula_importer_spark.operators.connected_components import canonical_mappi
 from nebula_importer_spark.operators.linking import link_mentions
 from nebula_importer_spark.operators.skew import salted_repartition
 from nebula_importer_spark.plans.merge import TableStore
-from nebula_importer_spark.transcripts.extract import (
-    extract_triples,
-    normalize_mention,
-    ordered_turns,
-)
+from nebula_importer_spark.transcripts.extract import extract_triples, normalize_mention
 
 
 @dataclass
@@ -67,19 +66,6 @@ class TranscriptPipeline:
         self.spark = spark
         self.fuzzy_threshold = fuzzy_threshold
         self.salt_buckets = salt_buckets
-        # persisted frames registered by stages; release() unpersists them
-        # so cached blocks do not accumulate across runs in a long session
-        self._persisted: list[DataFrame] = []
-
-    def release(self) -> None:
-        """Unpersist every frame the stages cached (call after the consuming
-        actions finish; run() does this automatically)."""
-        for df in self._persisted:
-            try:
-                df.unpersist()
-            except Exception:  # pragma: no cover — session already stopped
-                pass
-        self._persisted.clear()
 
     # -- composable stages (each returns a DataFrame; no side effects) -----
     def triples_surface(self, transcripts: DataFrame) -> DataFrame:
@@ -118,7 +104,8 @@ class TranscriptPipeline:
         same_as: DataFrame | None,
     ) -> tuple[DataFrame, DataFrame]:
         """Stages 3b-4: resolve surface forms → canonical entity triples.
-        Returns (triples, unlinked_mentions)."""
+        Returns (triples, unlinked_mentions), two uncached plans over one
+        broadcast join: each action on them re-reads both inputs."""
         links = links.select("mention_norm", "entity_id")
         if same_as is not None:
             canon = canonical_mapping(same_as)
@@ -138,13 +125,9 @@ class TranscriptPipeline:
         o_link = links.withColumnRenamed("mention_norm", "obj_norm").withColumnRenamed(
             "entity_id", "obj"
         )
-        # Both outputs (ok-triples and unlinked-rejects) are counted/written
-        # by callers as separate actions; persist the joined frame so the
-        # extraction join tree runs once, not once per output.
         joined = st.join(F.broadcast(s_link), "subj_norm", "left").join(
             F.broadcast(o_link), "obj_norm", "left"
-        ).persist()
-        self._persisted.append(joined)
+        )
         ok = joined.filter(F.col("subj").isNotNull() & F.col("obj").isNotNull())
         triples = ok.select("conv_id", "turn_idx", "subj", "pred", "obj").distinct()
         unlinked = (
@@ -214,8 +197,6 @@ class TranscriptPipeline:
 
             t = time.time()
             triples, unlinked = self.canonical_triples(surface, links, same_as)
-            triples = triples.cache()
-            self._persisted.append(triples)
             res.stages["canon"] = time.time() - t
 
             # -- materialize in tag/edge schema shape (G1/G2 analog) -------
@@ -263,7 +244,6 @@ class TranscriptPipeline:
             )
             res.stages["materialize"] = time.time() - t
             res.duration_sec = time.time() - t0
-            self.release()
             return res
 
     # -- evaluation ---------------------------------------------------------
@@ -276,12 +256,10 @@ class TranscriptPipeline:
         surface = self.triples_surface(transcripts)
         links = self.link_table(surface, alias_dict)
         triples, _ = self.canonical_triples(surface, links, same_as)
-        out = {
+        return {
             (r["conv_id"], r["turn_idx"], r["subj"], r["pred"], r["obj"])
             for r in triples.collect()
         }
-        self.release()
-        return out
 
 
 def extraction_coverage(transcripts: DataFrame, triples: DataFrame) -> DataFrame:

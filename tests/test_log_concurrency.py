@@ -88,10 +88,11 @@ def test_run_writes_log_file_and_caps_write_tasks(spark, tmp_path):
         assert len(list(bdir.glob("part-*.parquet"))) == 1
 
 
-def test_reader_concurrency_caps_scan_partitions(spark):
+def test_reader_concurrency_caps_scan_partitions(spark, tmp_path):
     cfg = config_from_dict(_cfg_dict(readerConcurrency=1))
     good, _ = read_source(
-        spark, cfg.sources[0], reader_concurrency=cfg.reader_concurrency
+        spark, cfg.sources[0], str(tmp_path),
+        reader_concurrency=cfg.reader_concurrency,
     )
     # the staged scan was written by a single task → a single split
     assert good.rdd.getNumPartitions() == 1

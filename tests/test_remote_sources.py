@@ -60,14 +60,14 @@ def test_gcs_and_hdfs_resolve():
     assert conf["env.HADOOP_USER_NAME"] == "etl"
 
 
-def test_apply_hadoop_conf_sets_live_session_keys(spark):
+def test_apply_hadoop_conf_sets_live_session_keys(spark, tmp_path):
     spec = SourceSpec(
         s3=S3Options(bucket="bx", key="k.csv", endpoint="http://e:9000",
                      access_key_id="A", access_key_secret="S"),
         tags=[],
         edges=[],
     )
-    uri = resolve_remote(spark, spec)
+    uri = resolve_remote(spark, spec, str(tmp_path))
     assert uri == "s3a://bx/k.csv"
     hconf = spark.sparkContext._jsc.hadoopConfiguration()
     assert hconf.get("fs.s3a.bucket.bx.endpoint") == "http://e:9000"

@@ -49,7 +49,6 @@ def test_stream_matches_batch_and_is_incremental(spark, tmp_path):
     links = p.link_table(surface, d["alias_dict"])
     batch_triples, _ = p.canonical_triples(surface, links, same_as=None)
     assert _triples_set(store.read("triples")) == _triples_set(batch_triples)
-    p.release()
 
     # drop a second file: only the new turns are processed; the table ends
     # equal to a batch run over the full corpus
@@ -62,7 +61,6 @@ def test_stream_matches_batch_and_is_incremental(spark, tmp_path):
     links_f = p2.link_table(surface_f, d["alias_dict"])
     full_triples, _ = p2.canonical_triples(surface_f, links_f, same_as=None)
     assert _triples_set(store.read("triples")) == _triples_set(full_triples)
-    p2.release()
 
     # no new files → the checkpoint ledger yields zero batches, zero writes
     v_before = store.current_version("triples")
@@ -70,6 +68,70 @@ def test_stream_matches_batch_and_is_incremental(spark, tmp_path):
     r3 = run_incremental_kg(stream3, d["alias_dict"], out, ckpt)
     assert r3["batches"] == 0
     assert store.current_version("triples") == v_before
+
+
+def test_stream_counts_rows_on_the_triple_merge(spark, tmp_path, monkeypatch):
+    """rows adds up each micro-batch's triples from an Observation on its
+    triple merge: it equals a batch run's count over the same turns, on a
+    first load and on a merge into live buckets, and the stream runs no
+    count action."""
+    from pyspark.sql.classic.dataframe import DataFrame as ClassicDataFrame
+
+    d, _, _, full = _setup(spark)
+    first = full.filter(F.col("conv_id") < "conv_00006")
+    second = full.filter(F.col("conv_id") >= "conv_00006")
+    indir, out, ckpt = tmp_path / "in", tmp_path / "out", tmp_path / "ckpt"
+    counted = []
+    count = ClassicDataFrame.count
+
+    def recording_count(self):
+        counted.append(self)
+        return count(self)
+
+    monkeypatch.setattr(ClassicDataFrame, "count", recording_count)
+    p = TranscriptPipeline(spark)
+    for half in (first, second):
+        half.coalesce(1).write.mode("append").parquet(str(indir))
+        res = run_incremental_kg(
+            read_transcript_stream(spark, str(indir)), d["alias_dict"], out, ckpt
+        )
+        surface = p.triples_surface(half)
+        links = p.link_table(surface, d["alias_dict"])
+        batch_triples, _ = p.canonical_triples(surface, links, same_as=None)
+        assert res["batches"] == 1
+        assert res["rows"] == len(_triples_set(batch_triples)) > 0
+    assert counted == []
+
+
+def test_stream_extracts_each_turn_once(spark, tmp_path, monkeypatch):
+    """A micro-batch sends each of its turns through the extraction kernel
+    once: linking, the triple merge and the rejects write share its
+    persisted surface triples."""
+    import nebula_importer_spark.transcripts.extract as extract
+
+    d, half_a, _, _ = _setup(spark)
+    indir = tmp_path / "in"
+    half_a.coalesce(1).write.mode("append").parquet(str(indir))
+    kernel_rows = spark.sparkContext.accumulator(0)
+    kernel = extract._extract_batches
+
+    def counting_kernel(batches):
+        def tapped():
+            for pdf in batches:
+                kernel_rows.add(len(pdf))
+                yield pdf
+
+        return kernel(tapped())
+
+    monkeypatch.setattr(extract, "_extract_batches", counting_kernel)
+    res = run_incremental_kg(
+        read_transcript_stream(spark, str(indir)),
+        d["alias_dict"],
+        tmp_path / "out",
+        tmp_path / "ckpt",
+    )
+    assert res["batches"] == 1 and res["rows"] > 0
+    assert kernel_rows.value == half_a.count()
 
 
 def test_replay_is_idempotent(spark, tmp_path):
@@ -155,7 +217,6 @@ def test_refresh_analytics_matches_batch_bit_exact(spark, tmp_path):
         F.col("subj").alias("src"), F.col("obj").alias("dst")
     )
     want_rank = {r.node: r.rank_scaled for r in pagerank(edges, iterations=4).collect()}
-    p.release()
 
     assert set(got) == set(want_rank)
     assert {k: v[2] for k, v in got.items()} == want_rank

@@ -201,6 +201,17 @@ def _cache_state(spark) -> tuple[bool, int]:
     return cache.isEmpty(), spark.sparkContext._jsc.getPersistentRDDs().size()
 
 
+def test_stages_cache_nothing(spark, sdfs):
+    """Calling the stages only builds plans: nothing is cached before an
+    action runs on their outputs."""
+    spark.catalog.clearCache()
+    p = TranscriptPipeline(spark)
+    surface = p.triples_surface(sdfs["transcripts"])
+    links = p.link_table(surface, sdfs["alias_dict"])
+    p.canonical_triples(surface, links, sdfs["same_as"])
+    assert _cache_state(spark)[0]
+
+
 def test_runs_leave_no_cached_data(spark, sdfs, tmp_path):
     """run(), triples_set() and an available-now incremental run leave
     nothing cached: in a long-lived session every run's blocks would
