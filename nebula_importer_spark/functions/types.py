@@ -15,7 +15,6 @@ from __future__ import annotations
 
 from pyspark.sql import Column
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 # Unsigned integer literal detection, decimal or hex — drives the TIMESTAMP
 # dual mode and INT hex support (reference pkg/utils/string.go:5-48).
@@ -79,22 +78,3 @@ def convert_type(c: Column, value_type: str) -> Column:
         return _geography_expr(c, t)
     raise ValueError(f"unsupported type {value_type!r}")
 
-
-def spark_type(value_type: str) -> T.DataType:
-    """Output Spark type for a declared prop type."""
-    t = value_type.upper()
-    return {
-        "BOOL": T.BooleanType(),
-        "INT": T.LongType(),
-        "FLOAT": T.FloatType(),
-        "DOUBLE": T.DoubleType(),
-        "STRING": T.StringType(),
-        "DATE": T.DateType(),
-        "TIME": T.StringType(),
-        "DATETIME": T.TimestampNTZType(),
-        "TIMESTAMP": T.TimestampType(),
-        "GEOGRAPHY": T.StringType(),
-        "GEOGRAPHY(POINT)": T.StringType(),
-        "GEOGRAPHY(LINESTRING)": T.StringType(),
-        "GEOGRAPHY(POLYGON)": T.StringType(),
-    }[t]

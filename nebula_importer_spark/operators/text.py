@@ -3,7 +3,7 @@
 All pure JVM expressions (regexp_count / split / length arithmetic) chosen so
 each has an exactly-equivalent ANSI-SQL form for the DuckDB oracle:
 
-- token_count          whitespace tokens + a BPE-ish subword estimate
+- token_count          whitespace tokens
 - lang_id              n-gram/stopword-ratio heuristic over small wordlists
 - quality_score        length / punctuation / stopword-ratio composite
 - fingerprint          document fingerprint = min MD5 over char shingles
@@ -46,13 +46,6 @@ def token_count(col) -> Column:
     no empty-string edge case."""
     c = F.col(col) if isinstance(col, str) else col
     return F.regexp_count(F.coalesce(c, F.lit("")), F.lit(NOT_WS + "+")).cast("long")
-
-
-def subword_count(col) -> Column:
-    """BPE-ish token estimate: count word chunks of ≤4 chars after splitting
-    long words (a deterministic regex proxy for BPE segmentation)."""
-    c = F.col(col) if isinstance(col, str) else col
-    return F.regexp_count(F.coalesce(c, F.lit("")), F.lit(r"[A-Za-z0-9]{1,4}")).cast("long")
 
 
 def stopword_ratio(col, lang: str = "en") -> Column:

@@ -1,9 +1,12 @@
 """Versioned parquet table store with merge semantics + snapshot manifest.
 
-Plays the role of the reference's NebulaGraph sink (W1-W7): INSERT statements
-become key-deduplicated upserts, UPDATE becomes matched-only merge, DELETE
-becomes anti-join removal (reference statement builders
-pkg/spec/v3/node.go:149-262, edge.go:195-363; mode enum pkg/spec/base/mode.go).
+Plays the role of the reference's NebulaGraph sink (W1-W7). The reference
+builds one statement per mode (pkg/spec/v3/node.go:149-262,
+edge.go:195-363; mode enum pkg/spec/base/mode.go); here every mode is one
+MERGE INTO-shaped full outer join of the touched bucket slice with the
+key-deduplicated batch, and the mode only picks which rows and values the
+join keeps: INSERT upserts, UPDATE changes matched rows only (counting the
+misses on the write), DELETE drops the matched rows.
 
 Storage layout (Iceberg-shaped, dependency-free — the real deployment swaps
 this for an Iceberg catalog; the snapshot/manifest discipline is identical):
@@ -25,7 +28,7 @@ Snapshots make every run resumable (checkpoint analog of the north rule):
 a crashed run re-reads the manifest and continues from the last committed
 version; stages record completion so re-runs skip finished work.
 
-Scale notes: merge joins shuffle on the key columns only; incoming batches
+Scale notes: the merge join shuffles on the key columns only; incoming batches
 are deduplicated map-side first (last-write-wins by _seq, the statement-order
 analog). ``n_buckets`` defaults to 16 for the sandbox; size it so one bucket
 ≈ a few GB at the deployment's table size (e.g. 2^10-2^12 buckets at 100 TB).
@@ -41,7 +44,7 @@ import threading
 import time
 from pathlib import Path
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
@@ -229,11 +232,10 @@ class TableStore:
         )
 
     def _with_bucket(
-        self, df: DataFrame, key_cols: list[str], n_buckets: int | None = None
+        self, df: DataFrame, key_cols: list[str], n_buckets: int
     ) -> DataFrame:
         return df.withColumn(
-            BUCKET_COL,
-            F.pmod(F.xxhash64(*key_cols), F.lit(n_buckets or self.n_buckets)),
+            BUCKET_COL, F.pmod(F.xxhash64(*key_cols), F.lit(n_buckets))
         )
 
     def commit(self, df: DataFrame, table: str) -> int:
@@ -254,17 +256,26 @@ class TableStore:
     def merge_commit(
         self, df: DataFrame, table: str, mode: Mode, key_cols: list[str]
     ) -> tuple[int, int]:
-        """Keyed incremental merge: dedup incoming → read ONLY the buckets
-        the batch touches → apply INSERT/UPDATE/DELETE against that slice →
-        rewrite those buckets under a new version; untouched buckets keep
-        their existing files (manifest records bucket→version).
+        """Keyed incremental merge, one MERGE INTO-shaped join for every
+        mode: dedup and bucket the incoming batch → read ONLY the live
+        buckets it touches → full-outer-join that slice with the batch on
+        (keys, bucket) → rewrite the buckets the result lands in under a new
+        version; untouched buckets keep their existing files (manifest
+        records bucket→version).
 
-        INSERT: upsert — incoming replaces existing rows on key
-                (Nebula INSERT overwrites existing element props).
-        UPDATE: matched keys get new prop values; rows addressing missing
+        INSERT: upsert — a batch row replaces the slice row on its key, so
+                props it does not name come back null (Nebula INSERT
+                overwrites the element); new props widen the table.
+        UPDATE: slice rows only; a matched key takes the props the batch
+                names and keeps its others. Batch rows addressing missing
                 keys are dropped and counted (the reference's UPDATE on a
-                missing element errors → rejected record).
-        DELETE: rows with matching keys removed.
+                missing element errors → rejected record) by an Observation
+                on the snapshot write.
+        DELETE: slice rows whose key the batch does not name.
+
+        With no live bucket touched, INSERT writes the batch as it is and
+        UPDATE/DELETE change nothing: one count of the batch fires the
+        caller's observations, and UPDATE counts every row unmatched.
 
         Returns (new_version, unmatched_update_count).
         """
@@ -273,42 +284,137 @@ class TableStore:
         # pmod would route keys past their live rows and corrupt the merge);
         # self.n_buckets only sizes NEW tables.
         nb = entry.get("n_buckets", self.n_buckets) if entry else self.n_buckets
+        cur_map: dict[str, int] = dict(entry.get("buckets", {})) if entry else {}
+        prev_v = entry["version"] if entry else 0
         incoming = self._dedup_incoming(df, key_cols)
         incoming = incoming.drop(*[c for c in incoming.columns if c.startswith("_")])
         incoming = self._with_bucket(incoming, key_cols, nb)
-
-        cur_map: dict[str, int] = dict(entry.get("buckets", {})) if entry else {}
-        prev_v = entry["version"] if entry else 0
-
-        if entry is None and mode != Mode.INSERT:
-            # UPDATE/DELETE against a missing table: nothing to change, but
-            # still run ONE action over the incoming frame so caller-attached
-            # observe() metrics fire; UPDATE counts everything unmatched.
-            n = incoming.count()
-            return 0, (n if mode == Mode.UPDATE else 0)
-
-        # Which buckets does this batch touch? Bounded by n_buckets — a
-        # driver-side list of ≤ n_buckets ints, never data rows. On an
-        # initial load there are no live buckets to prune against, so skip
-        # the pass entirely and derive the touched set from the partition
-        # dirs the write produces (affected == written when nothing is live).
+        # With live buckets the batch is read twice (bucket discovery, then
+        # the count or the merge write): persist it so its upstream plan
+        # (dedup window over the mapped source) runs once. try/finally: a
+        # schema error or failed write must not leave the cache pinned
+        # (long-lived streaming drivers call merge_commit per micro-batch).
         if cur_map:
-            # incoming is consumed 2-3× below (bucket discovery, UPDATE's
-            # unmatched count, the snapshot write) — persist so the upstream
-            # plan (dedup window over the mapped source) runs once.
-            # try/finally: an UPDATE schema error or failed write must not
-            # leave the cache pinned (long-lived streaming drivers call
-            # merge_commit per micro-batch).
             incoming = incoming.persist()
-            try:
-                return self._merge_live(
-                    entry, table, mode, key_cols, incoming, cur_map, prev_v, nb
+        try:
+            # The touched live buckets: a driver-side list of ≤ n_buckets
+            # ints, never data rows. With nothing live (a first load) there
+            # is nothing to prune against, so no pass.
+            touched = []
+            if cur_map:
+                touched = sorted(
+                    b
+                    for (b,) in incoming.select(BUCKET_COL).distinct().collect()
+                    if str(b) in cur_map
                 )
-            finally:
+            if not touched and mode != Mode.INSERT:
+                n = incoming.count()
+                return prev_v, (n if mode == Mode.UPDATE else 0)
+
+            table_cols = self._table_columns(entry, table)
+            state, unmatched = incoming, None
+            if touched:
+                slice_paths = [
+                    str(self.root / table / f"v={cur_map[str(b)]}" / f"{BUCKET_COL}={b}")
+                    for b in touched
+                ]
+                # read on the incoming frame's session, whose conf (a
+                # source's own Arrow batch) the commit's write then runs under
+                current = self._with_bucket(
+                    incoming.sparkSession.read.option("mergeSchema", "true")
+                    .parquet(*slice_paths)
+                    .drop(BUCKET_COL),
+                    key_cols,
+                    nb,
+                )
+                props = [] if mode == Mode.DELETE else [
+                    c for c in incoming.columns if c not in (*key_cols, BUCKET_COL)
+                ]
+                if mode == Mode.UPDATE:
+                    # UPDATE ... SET names a subset of the table's props
+                    # (reference pkg/spec/v3/node.go update statement
+                    # builder); one the table lacks is an execution error
+                    # there, not a silent widen/drop
+                    unknown = [c for c in props if c not in table_cols]
+                    if unknown:
+                        raise ValueError(
+                            f"UPDATE {table}: props not in table schema: {unknown}"
+                        )
+                merged = current.withColumn("_cur", F.lit(True)).join(
+                    incoming.select(
+                        *key_cols,
+                        BUCKET_COL,
+                        *[F.col(c).alias(f"_u_{c}") for c in props],
+                        F.lit(True).alias("_in"),
+                    ),
+                    [*key_cols, BUCKET_COL],
+                    "full_outer",
+                )
+                is_cur, is_in = F.col("_cur").isNotNull(), F.col("_in").isNotNull()
+                if mode == Mode.UPDATE:
+                    unmatched = Observation()
+                    merged = merged.observe(
+                        unmatched, F.count_if(is_in & ~is_cur).alias("n")
+                    )
+
+                def pick(c: str) -> Column:
+                    # a named prop takes the batch's value where the batch
+                    # has the key; INSERT nulls the props it does not name
+                    if c in props:
+                        new = F.when(is_in, F.col(f"_u_{c}"))
+                        if c in current.columns:
+                            new = new.otherwise(F.col(c))
+                        return new.alias(c)
+                    if mode == Mode.INSERT and c not in (*key_cols, BUCKET_COL):
+                        return F.when(~is_in, F.col(c)).alias(c)
+                    return F.col(c)
+
+                rows = {
+                    Mode.INSERT: F.lit(True),
+                    Mode.UPDATE: is_cur,
+                    Mode.DELETE: is_cur & ~is_in,
+                }[mode]
+                # the slice's columns, then props new to it
+                state = merged.filter(rows).select(
+                    *[pick(c) for c in current.columns],
+                    *[pick(c) for c in props if c not in current.columns],
+                )
+            v = prev_v + 1
+            out = self.root / table / f"v={v}"
+            self._capped(state).write.partitionBy(BUCKET_COL).mode(
+                "overwrite"
+            ).parquet(str(out))
+        finally:
+            if cur_map:
                 incoming.unpersist()
-        return self._merge_live(
-            entry, table, mode, key_cols, incoming, cur_map, prev_v, nb
+
+        # A touched bucket can come out empty (DELETE): only the bucket dirs
+        # written advance, the others leave the map.
+        new_map = {b: bv for b, bv in cur_map.items() if int(b) not in touched}
+        new_map.update(
+            (p.name.split("=", 1)[1], v)
+            for p in out.glob(f"{BUCKET_COL}=*")
+            if p.is_dir()
         )
+        history = (entry or {}).get("history", [])
+        if entry is not None:
+            history = history + [{"version": prev_v, "buckets": cur_map}]
+        with self._updating_manifest() as m:
+            m["tables"][table] = {
+                "version": v,
+                "buckets": new_map,
+                "n_buckets": nb,
+                # full-table column set: union of what was known with what
+                # this commit wrote (a widening INSERT extends it;
+                # UPDATE/DELETE keep it) — the UPDATE validation source,
+                # bucket-independent
+                "columns": sorted(
+                    set(table_cols or [])
+                    | {c for c in state.columns if c != BUCKET_COL}
+                ),
+                "history": history,
+            }
+        return v, (unmatched.get["n"] if unmatched is not None else 0)
 
     def _table_columns(self, entry: dict | None, table: str) -> list[str] | None:
         """The table's FULL column set, independent of which buckets a batch
@@ -325,132 +431,3 @@ class TableStore:
             df = self.read(table)
             cols = list(df.columns) if df is not None else []
         return cols
-
-    def _merge_live(
-        self, entry, table, mode, key_cols, incoming, cur_map, prev_v, nb
-    ) -> tuple[int, int]:
-        unmatched = 0
-        table_cols = self._table_columns(entry, table)
-        if cur_map:
-            affected = sorted(
-                r[BUCKET_COL]
-                for r in incoming.select(BUCKET_COL).distinct().collect()
-            )
-        else:
-            affected = None  # resolved from written dirs after the write
-        touched_live = [b for b in (affected or []) if str(b) in cur_map]
-        slice_paths = [
-            str(self.root / table / f"v={cur_map[str(b)]}" / f"{BUCKET_COL}={b}")
-            for b in touched_live
-        ]
-        # read on the incoming frame's session, whose conf (a source's own
-        # Arrow batch) the commit's write then runs under
-        current = (
-            self._with_bucket(
-                incoming.sparkSession.read.option("mergeSchema", "true")
-                .parquet(*slice_paths)
-                .drop(BUCKET_COL),
-                key_cols,
-                nb,
-            )
-            if slice_paths
-            else None
-        )
-
-        if mode == Mode.INSERT:
-            if current is None:
-                state = incoming
-            else:
-                kept = current.join(
-                    incoming.select(*key_cols), on=key_cols, how="left_anti"
-                )
-                # INSERT replaces the element: props the new statement does
-                # not name come back null (Nebula INSERT overwrite shape);
-                # props new to the table extend the schema (null elsewhere).
-                state = kept.unionByName(incoming, allowMissingColumns=True)
-        elif mode == Mode.UPDATE:
-            if current is None:
-                return prev_v, incoming.count()
-            keys = current.select(*key_cols)
-            unmatched = incoming.join(keys, key_cols, "left_anti").count()
-            # UPDATE ... SET assigns ONLY the props the statement names
-            # (reference pkg/spec/v3/node.go update statement builder); a
-            # matched row keeps its other columns. The reference's own
-            # basic.*.update example updates a prop subset, so incoming's
-            # schema is narrower than the table's here.
-            upd_cols = [c for c in incoming.columns if c not in (*key_cols, BUCKET_COL)]
-            known = set(table_cols) if table_cols is not None else set(current.columns)
-            unknown = [c for c in upd_cols if c not in known]
-            if unknown:
-                # the reference's UPDATE on a schema-less prop is an
-                # execution error, not a silent widen/drop
-                raise ValueError(
-                    f"UPDATE {table}: props not in table schema: {unknown}"
-                )
-            renamed = incoming.select(
-                *key_cols, *[F.col(c).alias(f"_u_{c}") for c in upd_cols]
-            )
-            # A valid prop can be absent from THIS bucket slice (the widening
-            # INSERT rewrote other buckets) — extend the output columns so
-            # the update still lands; kept rows null-fill via unionByName.
-            out_cols = list(current.columns) + [
-                c for c in upd_cols if c not in current.columns
-            ]
-            updated = current.join(renamed, key_cols, "inner").select(
-                *[
-                    F.col(f"_u_{c}").alias(c) if c in upd_cols else F.col(c)
-                    for c in out_cols
-                ]
-            )
-            kept = current.join(incoming.select(*key_cols), key_cols, "left_anti")
-            state = kept.unionByName(updated, allowMissingColumns=True)
-        elif mode == Mode.DELETE:
-            if current is None:
-                incoming.count()  # fire caller observations
-                return prev_v, 0
-            state = current.join(incoming.select(*key_cols), key_cols, "left_anti")
-        else:
-            raise ValueError(f"unsupported mode {mode}")
-
-        v = prev_v + 1
-        out = self.root / table / f"v={v}"
-        self._capped(state).write.partitionBy(BUCKET_COL).mode("overwrite").parquet(
-            str(out)
-        )
-
-        # A bucket can come out empty (DELETE) — only materialized bucket
-        # dirs advance; affected-but-empty buckets drop out of the map.
-        written = {
-            int(p.name.split("=", 1)[1])
-            for p in out.glob(f"{BUCKET_COL}=*")
-            if p.is_dir()
-        }
-        if affected is None:
-            affected = sorted(written)
-        new_map = dict(cur_map)
-        for b in affected:
-            if b in written:
-                new_map[str(b)] = v
-            else:
-                new_map.pop(str(b), None)
-        history = (entry or {}).get("history", [])
-        if entry is not None:
-            history = history + [
-                {"version": prev_v, "buckets": dict(cur_map)}
-            ]
-        with self._updating_manifest() as m:
-            m["tables"][table] = {
-                "version": v,
-                "buckets": new_map,
-                "n_buckets": nb,
-                # full-table column set: union of what was known with what
-                # this commit wrote (a widening INSERT extends it;
-                # UPDATE/DELETE keep it) — the UPDATE validation source,
-                # bucket-independent
-                "columns": sorted(
-                    set(table_cols or [])
-                    | {c for c in state.columns if c != BUCKET_COL}
-                ),
-                "history": history,
-            }
-        return v, unmatched

@@ -140,6 +140,12 @@ class Element:
     def table(self) -> str:
         return f"{self.kind}s/{self.spec.name}"
 
+    @property
+    def stage(self) -> str:
+        """The run() stage that commits this element (resume skips it once
+        it completed)."""
+        return f"s{self.source}/{self.kind}/{self.spec.name}/{self.spec.mode.value}"
+
     def null_key(self) -> Column:
         """A row with a null id: rejected by run(), left out by the reads."""
         return reduce(operator.or_, [F.col(k).isNull() for k, _ in self.ids])
@@ -397,15 +403,23 @@ class Pipeline:
 
     def _stage_source(self, i, store, appends, rejects_dir, resume) -> int:
         """Phase 1 of run(): stage source ``i`` and write its CSV rejects.
-        Returns the CSV reject count."""
+        Returns the CSV reject count. A resumed run stages a source only if
+        one of its stages is not complete, so phase 2 never stages one."""
+        # The rejects write is a resumable stage of its own: a resumed run
+        # must not append the same reject rows twice.
+        rej_stage = f"s{i}/rejects"
+        if resume and store.stage_completed(rej_stage):
+            if not all(
+                store.stage_completed(el.stage)
+                for el in elements(self.config)
+                if el.source == i
+            ):
+                self._scan(i)
+            return int(store.read_manifest()["stages"][rej_stage].get("rejected", 0))
         _, csv_rejects = self._scan(i)
         # The rejects count rides the rejects write (observe — no standalone
         # .count() pass; at scale every extra count is a full scan of the
-        # staged source). The write is a resumable stage of its own: a
-        # resumed run must not append the same reject rows twice.
-        rej_stage = f"s{i}/rejects"
-        if resume and store.stage_completed(rej_stage):
-            return int(store.read_manifest()["stages"][rej_stage].get("rejected", 0))
+        # staged source).
         rej_obs = Observation()
         with appends[rejects_dir / "csv"]:
             csv_rejects.observe(
@@ -422,8 +436,7 @@ class Pipeline:
         target table, in order. Returns their stats by ``n``."""
         done = {}
         for n, el in chain:
-            i, kind, spec = el.source, el.kind, el.spec
-            stage = f"s{i}/{kind}/{spec.name}/{spec.mode.value}"
+            i, kind, spec, stage = el.source, el.kind, el.spec, el.stage
             if resume and store.stage_completed(stage):
                 continue
             src = self.config.sources[i]

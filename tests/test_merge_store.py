@@ -60,6 +60,57 @@ def test_incremental_update_and_delete(spark, tmp_path):
     assert "k2" not in got and len(got) == 31
 
 
+def test_update_into_live_buckets_counts_misses_on_the_write(
+    spark, tmp_path, monkeypatch
+):
+    """An UPDATE into live buckets counts the keys it misses by an
+    Observation on its snapshot write: no count action of its own."""
+    from pyspark.sql.classic.dataframe import DataFrame as ClassicDataFrame
+
+    store = TableStore(tmp_path / "s", spark, n_buckets=8)
+    base = spark.createDataFrame(
+        [(f"k{i}", f"v{i}") for i in range(32)], "vid string, val string"
+    )
+    store.merge_commit(base, "tags/t", Mode.INSERT, ["vid"])
+    counted = []
+    count = ClassicDataFrame.count
+
+    def recording_count(self):
+        counted.append(self)
+        return count(self)
+
+    monkeypatch.setattr(ClassicDataFrame, "count", recording_count)
+    upd = spark.createDataFrame(
+        [("k1", "u1"), ("nope", "x")], "vid string, val string"
+    )
+    assert store.merge_commit(upd, "tags/t", Mode.UPDATE, ["vid"]) == (2, 1)
+    assert counted == []
+    got = {r["vid"]: r["val"] for r in store.read("tags/t").collect()}
+    assert got["k1"] == "u1" and "nope" not in got and len(got) == 32
+
+
+def test_delete_of_every_key_empties_the_table(spark, tmp_path):
+    """A DELETE naming every key leaves an empty bucket map: the table
+    reads as 0 rows with its columns, time travel still sees the rows, an
+    UPDATE then misses every key and a re-INSERT repopulates it."""
+    store = TableStore(tmp_path / "s", spark, n_buckets=4)
+    rows = [(f"k{i}", f"v{i}") for i in range(8)]
+    base = spark.createDataFrame(rows, "vid string, val string")
+    store.merge_commit(base, "tags/t", Mode.INSERT, ["vid"])
+    v2, _ = store.merge_commit(base.select("vid"), "tags/t", Mode.DELETE, ["vid"])
+    assert v2 == 2
+    assert store.read_manifest()["tables"]["tags/t"]["buckets"] == {}
+    empty = store.read("tags/t")
+    assert empty.collect() == [] and set(empty.columns) == {"vid", "val"}
+    assert len(store.read("tags/t", version=1).collect()) == 8
+
+    upd = spark.createDataFrame([("k1", "u1"), ("k2", "u2")], "vid string, val string")
+    assert store.merge_commit(upd, "tags/t", Mode.UPDATE, ["vid"]) == (2, 2)
+    v3, _ = store.merge_commit(base, "tags/t", Mode.INSERT, ["vid"])
+    assert v3 == 3
+    assert sorted(tuple(r) for r in store.read("tags/t").collect()) == sorted(rows)
+
+
 def test_update_missing_table_counts_all_unmatched(spark, tmp_path):
     store = TableStore(tmp_path / "s", spark, n_buckets=4)
     upd = spark.createDataFrame([("a", "1"), ("b", "2")], "vid string, val string")

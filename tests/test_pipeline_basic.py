@@ -135,6 +135,25 @@ def test_run_resume_skips_completed(spark, tmp_path):
     assert res2.elements == []  # every stage already committed
 
 
+def test_resume_of_a_finished_import_stages_no_source(spark, tmp_path, monkeypatch):
+    """A resumed run parses and stages no source whose stages all
+    completed: phase 1 skips it, and no chain has a stage left to run."""
+    from nebula_importer_spark.plans import pipeline as pl
+
+    Pipeline(_config(), spark).run(tmp_path)
+    staged = []
+    read_source = pl.read_source
+
+    def spy(spark, spec, *args, **kwargs):
+        staged.append(Path(spec.path).name)
+        return read_source(spark, spec, *args, **kwargs)
+
+    monkeypatch.setattr(pl, "read_source", spy)
+    res = Pipeline(_config(), spark).run(tmp_path, resume=True)
+    assert res.elements == []
+    assert staged == []
+
+
 def test_resume_does_not_duplicate_csv_rejects(spark, tmp_path):
     """The per-source rejects write is a resumable stage: a resumed run must
     report the prior reject count without appending the rows again."""

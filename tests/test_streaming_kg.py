@@ -22,8 +22,8 @@ def _setup(spark):
     t = d["transcripts"].withColumn(
         "ts", F.to_timestamp(F.lit("2026-01-01 00:00:00"))
     )
-    half_a = t.filter(F.col("conv_id") < "conv_0006")
-    half_b = t.filter(F.col("conv_id") >= "conv_0006")
+    half_a = t.filter(F.col("conv_id") < "conv_00006")
+    half_b = t.filter(F.col("conv_id") >= "conv_00006")
     return d, half_a, half_b, t
 
 
@@ -77,9 +77,7 @@ def test_stream_counts_rows_on_the_triple_merge(spark, tmp_path, monkeypatch):
     count action."""
     from pyspark.sql.classic.dataframe import DataFrame as ClassicDataFrame
 
-    d, _, _, full = _setup(spark)
-    first = full.filter(F.col("conv_id") < "conv_00006")
-    second = full.filter(F.col("conv_id") >= "conv_00006")
+    d, first, second, _ = _setup(spark)
     indir, out, ckpt = tmp_path / "in", tmp_path / "out", tmp_path / "ckpt"
     counted = []
     count = ClassicDataFrame.count

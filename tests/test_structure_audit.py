@@ -10,11 +10,15 @@
    operator modules in ``RETAINED_UNREACHED`` are the known exceptions:
    no entry point imports them, but their own tests still pin them, so
    they stay until those tests go.
+4. Every top-level def/class of the package must be named somewhere
+   outside its own definition: in the package, ``tests/``, ``tools/`` or
+   ``kgbench/``. A function nothing names is dead code.
 """
 
 from __future__ import annotations
 
 import ast
+import re
 from pathlib import Path
 
 REPO = Path(__file__).resolve().parent.parent
@@ -149,6 +153,29 @@ def reachable_modules(roots: list[str], modules: dict[str, Path]) -> set[str]:
     return seen
 
 
+def unnamed_toplevel_defs(package: Path, roots: list[Path]) -> list[str]:
+    """Top-level defs/classes of ``package`` that no ``.py`` file under
+    ``roots`` names (as a whole word, strings and comments included)
+    outside the definition's own lines."""
+    named: dict[str, set[tuple[Path, int]]] = {}
+    for path in {p for root in roots for p in root.rglob("*.py")}:
+        text = path.read_text()
+        for line_no, line in enumerate(text.splitlines(), 1):
+            for word in re.findall(r"\w+", line):
+                named.setdefault(word, set()).add((path, line_no))
+    unnamed = []
+    for path in sorted(package.rglob("*.py")):
+        for node in ast.parse(path.read_text()).body:
+            if not isinstance(
+                node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)
+            ):
+                continue
+            own = {(path, n) for n in range(node.lineno, node.end_lineno + 1)}
+            if not named.get(node.name, set()) - own:
+                unnamed.append(f"{path.relative_to(package.parent)}::{node.name}")
+    return unnamed
+
+
 def test_no_duplicate_toplevel_definitions():
     offenders = {}
     for path in sorted(PACKAGE.rglob("*.py")):
@@ -220,3 +247,27 @@ def test_reachability_walk_follows_every_import_form(tmp_path):
     modules = package_modules(pkg)
     reached = reachable_modules(["pkg"], modules)
     assert set(modules) - reached == {"pkg.orphan"}
+
+
+def test_every_toplevel_definition_is_named():
+    roots = [PACKAGE, *(REPO / d for d in ("tests", "tools", "kgbench"))]
+    unnamed = unnamed_toplevel_defs(PACKAGE, roots)
+    assert not unnamed, f"top-level definitions nothing names: {unnamed}"
+
+
+def test_unnamed_definition_audit_flags_a_planted_def(tmp_path):
+    """A def named only inside itself (recursion) is flagged; one named by
+    another module, a test or a string is not."""
+    pkg, tests = tmp_path / "pkg", tmp_path / "tests"
+    files = {
+        pkg / "a.py": (
+            "def used():\n    pass\n\n\ndef dead(n):\n    return dead(n - 1)\n"
+            "\n\nclass Quoted:\n    pass\n"
+        ),
+        pkg / "b.py": "from pkg.a import used\n\nNAMES = ['Quoted']\n",
+        tests / "test_b.py": "from pkg.b import NAMES\n",
+    }
+    for path, text in files.items():
+        path.parent.mkdir(parents=True, exist_ok=True)
+        path.write_text(text)
+    assert unnamed_toplevel_defs(pkg, [pkg, tests]) == ["pkg/a.py::dead"]
