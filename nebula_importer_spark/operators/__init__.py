@@ -1,10 +1,8 @@
 from nebula_importer_spark.operators.connected_components import connected_components
 from nebula_importer_spark.operators.linking import link_mentions, minhash_lsh_join
-from nebula_importer_spark.operators.skew import salted_repartition
 
 __all__ = [
     "connected_components",
     "link_mentions",
     "minhash_lsh_join",
-    "salted_repartition",
 ]

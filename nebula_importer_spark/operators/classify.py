@@ -20,7 +20,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from nebula_importer_spark.operators.skew import spread_small_input
 from nebula_importer_spark.operators.text import _word_ngrams_all
 
 
@@ -73,7 +72,7 @@ def nb_classify(
     from pyspark.sql.window import Window as W
 
     tc = F.coalesce(F.col(text_col), F.lit(""))
-    tr = spread_small_input(train_df).filter(F.col(label_col).isNotNull())
+    tr = train_df.filter(F.col(label_col).isNotNull())
     # tokenize + hash the training corpus ONCE: ltoks feeds three
     # aggregations (per-(label,token) counts, per-label totals, vocab
     # size) — unmaterialized, the explode would run three times, and the
@@ -106,7 +105,7 @@ def nb_classify(
         )
     )
 
-    stoks = spread_small_input(score_df).select(
+    stoks = score_df.select(
         F.col(id_col).alias("_id"), F.explode(_word_ngrams_all(tc, 1)).alias("_w")
     )
     terms = (

@@ -28,7 +28,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from nebula_importer_spark.operators.linking import minhash_lsh_join, word_ngrams
-from nebula_importer_spark.operators.skew import spread_small_input
 
 
 def exact_dedup(df: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
@@ -99,7 +98,6 @@ def doc_gram_hashes(
     leave the map side). Shared by batch :func:`gram_novelty` and the
     streaming incremental twin (streaming/corpus.py) so the two paths
     cannot drift."""
-    df = spread_small_input(df)  # shingling is CPU-bound; no-op at scale
     return df.select(
         F.col(id_col).alias("_id"),
         F.explode(word_ngrams(F.col(text_col), n)).alias("_g"),
@@ -162,7 +160,6 @@ def winnow_fingerprints(
 
     from nebula_importer_spark.operators.text import _word_ngrams_all
 
-    df = spread_small_input(df)
     g = df.select(
         F.col(id_col).alias("_id"),
         F.posexplode(
@@ -233,7 +230,6 @@ def _shared_shingle_counts(
     ``(id_a, id_b, _inter, _sza, _szb)`` for id_a < id_b, over the
     stop-shingle-capped universe (shared by the Jaccard and containment
     operators)."""
-    df = spread_small_input(df)  # shingling is CPU-bound; no-op at scale
     sh = df.select(F.col(id_col).alias("_id"), word_ngrams(F.col(text_col), n).alias("_sh"))
     ex = sh.select("_id", F.explode("_sh").alias("_g"))
     rare = (
@@ -388,7 +384,7 @@ def simhash_dup_pairs(
     pigeonhole cover is complete); beyond that it is a high-recall
     approximation (documented, like every LSH family here).
     """
-    sigs = simhash(spread_small_input(df), id_col, text_col, bits=bits, hash_mode=hash_mode)
+    sigs = simhash(df, id_col, text_col, bits=bits, hash_mode=hash_mode)
     width = bits // n_blocks
     blocks = sigs.select(
         id_col,
@@ -483,7 +479,6 @@ def embedding_dup_pairs(
     # vectors attach to the deduplicated candidate pairs afterwards — at
     # n_bands bands the explode would otherwise shuffle every vector
     # n_bands times and again per colliding pair.
-    df = spread_small_input(df)  # hyperplane dots are CPU-bound per row
     v = df.select(
         F.col(id_col).alias("_id"),
         F.posexplode(F.array(*band_keys)).alias("_band", "_bkt"),
@@ -563,7 +558,6 @@ def duplicate_spans(
 
     from nebula_importer_spark.operators.text import _word_ngrams_all
 
-    df = spread_small_input(df)  # shingling is CPU-bound; no-op at scale
     pos = df.select(
         F.col(id_col).alias("_id"),
         F.posexplode(_word_ngrams_all(F.col(text_col), n)).alias("_p0", "_g"),
@@ -703,7 +697,6 @@ def ssjoin_prefix(
     # so the prefix can only come out LONGER than the theory needs —
     # completeness survives thresholds that are not 1e-6-representable
     t6 = int(threshold * 10**6)
-    df = spread_small_input(df)
     ex = df.select(
         F.col(id_col).alias("_id"),
         F.explode(word_ngrams(F.col(text_col), n)).alias("_g"),
@@ -809,7 +802,6 @@ def hamming_pairs(
     h = df.select(
         F.col(id_col).alias("_id"), F.col(hash_col).cast("long").alias("_h")
     ).filter(F.col("_id").isNotNull() & F.col("_h").isNotNull())
-    h = spread_small_input(h)
     bands = h.select(
         "_id",
         "_h",

@@ -46,7 +46,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from nebula_importer_spark.operators.skew import spread_small_input
 from nebula_importer_spark.operators.text import NOT_WS
 
 
@@ -178,11 +177,8 @@ def dsir_importance(
         raise ValueError(
             f"id_col may not be the reserved scratch name {id_col!r}"
         )
-    raw = spread_small_input(raw)
     raw_b = _term_buckets(raw, id_col, text_col, n_buckets, use_bigrams, salt)
-    tgt_b = _term_buckets(
-        spread_small_input(target), None, text_col, n_buckets, use_bigrams, salt
-    )
+    tgt_b = _term_buckets(target, None, text_col, n_buckets, use_bigrams, salt)
     lam = _bucket_lambda(raw_b, tgt_b, n_buckets, precision)
     per_doc = (
         raw_b.join(F.broadcast(lam), "_b", "left")

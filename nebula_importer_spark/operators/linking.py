@@ -26,8 +26,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from nebula_importer_spark.operators.skew import spread_small_input
-
 DEFAULT_NUM_HASHES = 12
 DEFAULT_BAND_SIZE = 2
 
@@ -125,11 +123,10 @@ def minhash_lsh_join(
     to the k=0 expression (verified on 4.1.2) — every signature slot came
     out identical and LSH silently lost its seeds.
     """
+    # No repartition before the per-row shingling and minhashing:
+    # link_mentions passes distinct() output, already spread over the
+    # shuffle partitions.
     self_join = right is left and right_key != left_key
-    # shingling/minhash are CPU-bound per-row expressions: spread a
-    # few-split input across the cluster first (no-op at scale)
-    left = spread_small_input(left)
-    right = left if self_join else spread_small_input(right)
     mh = F.array(*[
         F.expr(f"array_min(transform(_shingles, s -> xxhash64(s, {k}L)))")
         for k in range(num_hashes)

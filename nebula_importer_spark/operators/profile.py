@@ -86,8 +86,7 @@ def skew_report(
     were hash-partitioned on ``key``, and the salt factor that would level
     them. This is the probe that DECIDES the repo's mega-key mitigations
     (span-salting in operators/temporal.py, the max_group_size guard in
-    operators/graph.py, salted extraction in transcripts/pipeline.py) —
-    measured, not guessed.
+    operators/graph.py) — measured, not guessed.
 
     Per flagged key: ``share_ppm`` = its parts-per-million of all rows
     (exact integer ``1e6·cnt div total``), ``suggested_salt`` =

@@ -38,7 +38,7 @@ from pyspark.sql.types import LongType, StructField, StructType
 from pyspark.sql.window import Window
 
 from nebula_importer_spark.operators.similarity import _as_double, cosine
-from nebula_importer_spark.operators.skew import spread_small_input
+
 
 MICRO = 1_000_000
 
@@ -122,7 +122,7 @@ def mmr_topk(
     if pool < 1 or k < 1:
         raise ValueError("pool and k must be >= 1")
 
-    c = spread_small_input(corpus).select(
+    c = corpus.select(
         F.col(id_col).alias("doc"), _as_double(F.col(vec_col)).alias("_cv")
     )
     q = queries.select(

@@ -30,8 +30,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from nebula_importer_spark.operators.skew import spread_small_input
-
 
 def _as_double(col):
     return F.transform(col, lambda x: x.cast("double"))
@@ -61,9 +59,7 @@ def brute_force_topk(
     """(query_id, neighbor_id, rank, cosine) — exact top-k per query.
     Deterministic tie-break on neighbor id. Self-matches (same id) excluded
     when id columns share a domain."""
-    # the NLJ scores |corpus|×|queries| dot products on the corpus side's
-    # tasks — a one-split corpus would compute them all on one core
-    c = spread_small_input(corpus).select(
+    c = corpus.select(
         F.col(id_col).alias("neighbor_id"), _as_double(F.col(vec_col)).alias("_cv")
     )
     q = queries.select(
@@ -182,7 +178,7 @@ def ivf_topk(
         denom = np.linalg.norm(a, axis=1) * np.linalg.norm(b, axis=1)
         return pd.Series((a * b).sum(axis=1) / np.maximum(denom, 1e-12))
 
-    c = spread_small_input(corpus).select(
+    c = corpus.select(
         F.col(id_col).alias("neighbor_id"), _as_double(F.col(vec_col)).alias("_cv")
     ).withColumn("_cell", _cell("_cv"))
     q = queries.select(
@@ -253,7 +249,7 @@ def embedding_bucket_purity(
             for b in range(n_bands)
         ]
     )
-    ex = spread_small_input(df).select(
+    ex = df.select(
         F.col(label_col).alias("_lbl"),
         F.posexplode(bands).alias("band", "bucket"),
     )
@@ -328,7 +324,7 @@ def lsh_topk(
             ]
         )
 
-    c = spread_small_input(corpus).select(
+    c = corpus.select(
         F.col(id_col).alias("neighbor_id"),
         _as_double(F.col(vec_col)).alias("_cv"),
     ).select(
@@ -387,7 +383,7 @@ def hard_negatives(
     ivf_topk candidate funnels with a label-inequality residual filter —
     this operator is the correctness baseline of that funnel.
     """
-    c = spread_small_input(corpus).select(
+    c = corpus.select(
         F.col(id_col).alias("negative_id"),
         F.col(label_col).alias("_nl"),
         _as_double(F.col(vec_col)).alias("_cv"),
@@ -642,8 +638,6 @@ def int8_topk(
     Returns ``(query_id, rank, neighbor_id, cosine_q)`` with the same
     NLJ + per-query top-k shape as :func:`brute_force_topk`.
     """
-    from nebula_importer_spark.operators.skew import spread_small_input
-
     if max_abs is None:
         max_abs = float(
             corpus.select(
@@ -658,7 +652,7 @@ def int8_topk(
         )
     if not max_abs > 0:
         raise ValueError(f"max_abs must be positive, got {max_abs}")
-    c = spread_small_input(corpus).select(
+    c = corpus.select(
         F.col(id_col).alias("neighbor_id"),
         quantize_vec(F.col(vec_col), max_abs).alias("_cq"),
     )

@@ -385,12 +385,9 @@ def bigram_lm_score(
     Returns ``(id_col, n_bigrams, cross_entropy, perplexity)`` with the
     floats rounded to 6 places.
     """
-    from nebula_importer_spark.operators.skew import spread_small_input
-
     if train_df is None:
         train_df = score_df
     tc = F.coalesce(F.col(text_col), F.lit(""))
-    train_df = spread_small_input(train_df)
     ttoks = train_df.select(F.explode(_word_ngrams_all(tc, 1)).alias("_w"))
     uni = ttoks.groupBy(F.xxhash64("_w").alias("_k1")).agg(
         F.count("*").alias("_cu")
@@ -401,7 +398,7 @@ def bigram_lm_score(
         .groupBy(F.xxhash64("_g").alias("_k2"))
         .agg(F.count("*").alias("_cb"))
     )
-    sb = spread_small_input(score_df).select(
+    sb = score_df.select(
         F.col(id_col).alias("_id"),
         F.explode(_word_ngrams_all(tc, 2)).alias("_g"),
     )
@@ -478,12 +475,9 @@ def kneser_ney_lm_score(
     Returns ``(id_col, n_bigrams, cross_entropy, perplexity)``; docs
     with < 2 tokens are absent.
     """
-    from nebula_importer_spark.operators.skew import spread_small_input
-
     if train_df is None:
         train_df = score_df
     tc = F.coalesce(F.col(text_col), F.lit(""))
-    train_df = spread_small_input(train_df)
     tb = train_df.select(F.explode(_word_ngrams_all(tc, 2)).alias("_g")).select(
         "_g",
         F.substring_index("_g", " ", 1).alias("_w1"),
@@ -502,7 +496,7 @@ def kneser_ney_lm_score(
     vocab = train_df.select(
         F.explode(_word_ngrams_all(tc, 1)).alias("_w")
     ).agg(F.count_distinct("_w").alias("_v"))
-    sb = spread_small_input(score_df).select(
+    sb = score_df.select(
         F.col(id_col).alias("_id"),
         F.explode(_word_ngrams_all(tc, 2)).alias("_g"),
     )
@@ -1414,12 +1408,8 @@ def js_divergence(
             raise ValueError(f"column {c!r} not in input: {df.columns}")
     if group_a == group_b:
         raise ValueError("group_a and group_b must differ")
-    from nebula_importer_spark.operators.skew import spread_small_input
-
     tc = F.coalesce(F.col(text_col), F.lit(""))
-    sel = spread_small_input(
-        df.filter(F.col(label_col).isin(group_a, group_b))
-    ).select(
+    sel = df.filter(F.col(label_col).isin(group_a, group_b)).select(
         (F.col(label_col) == group_a).alias("_isa"),
         F.explode(_word_ngrams_all(tc, 1)).alias("_w"),
     )

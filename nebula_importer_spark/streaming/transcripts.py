@@ -80,9 +80,10 @@ def run_incremental_kg(
 ) -> dict:
     """Drain the transcript stream into the triple store incrementally.
 
-    Per micro-batch: extract surface triples (Arrow-batched mapInPandas,
-    salted on conv_id) → link mentions against the broadcast alias dict →
-    keyed INSERT-merge into `<out>/kg/triples`; unlinked mentions append to
+    Per micro-batch: extract surface triples (Arrow-batched mapInPandas
+    after a hash repartition on (conv_id, turn_idx)) → link mentions
+    against the broadcast alias dict → keyed INSERT-merge into
+    `<out>/kg/triples`; unlinked mentions append to
     `<out>/kg/_rejects/stream`. With ``available_now`` the call processes
     every file currently present and returns (incremental batch job shape);
     pass False for a continuously-running query — the caller gets the

@@ -3,9 +3,10 @@
 Stages (run() checkpoints 2 and 3 as TableStore snapshots):
 
 1. order     — stable turn ordering window over (conv_id, turn_idx)
-2. extract   — Arrow-batched mapInPandas triple extraction (surface forms),
-               salted-repartitioned on conv_id so a mega-thread spreads over
-               many tasks (extraction is row-local → salting is safe)
+2. extract   — Arrow-batched mapInPandas triple extraction (surface forms)
+               after one hash repartition on the row key (conv_id,
+               turn_idx), so a mega-thread spreads over every task
+               (extraction is row-local, so no key needs one task)
 3. link      — broadcast-exact + MinHash-LSH fuzzy entity linking of the
                distinct mention vocabulary
 4. canon     — every entity id maps to the min id of its same_as
@@ -39,7 +40,6 @@ from pyspark.sql import functions as F
 from nebula_importer_spark.config.model import Mode
 from nebula_importer_spark.operators.connected_components import canonical_mapping
 from nebula_importer_spark.operators.linking import link_mentions
-from nebula_importer_spark.operators.skew import salted_repartition
 from nebula_importer_spark.plans.merge import TableStore
 from nebula_importer_spark.transcripts.extract import extract_triples, normalize_mention
 
@@ -57,15 +57,9 @@ class TranscriptRunResult:
 
 
 class TranscriptPipeline:
-    def __init__(
-        self,
-        spark: SparkSession,
-        fuzzy_threshold: float = 0.5,
-        salt_buckets: int = 32,
-    ):
+    def __init__(self, spark: SparkSession, fuzzy_threshold: float = 0.5):
         self.spark = spark
         self.fuzzy_threshold = fuzzy_threshold
-        self.salt_buckets = salt_buckets
 
     # -- composable stages (each returns a DataFrame; no side effects) -----
     def triples_surface(self, transcripts: DataFrame) -> DataFrame:
@@ -74,14 +68,20 @@ class TranscriptPipeline:
         Extraction is row-local, so no ordering window is needed here (the
         stable (conv_id, turn_idx) window — ordered_turns — backs the
         text-equality invariant and any per-conversation operator, not the
-        extraction kernel). The salted repartition spreads mega-threads that
-        arrive clustered in input splits across all tasks: one conv_id with
-        10^6 turns in one parquet file must not serialize into one task.
+        extraction kernel). A hash repartition on the row key (conv_id,
+        turn_idx) spreads turns that arrive clustered in input splits over
+        every task: one conv_id with 10^6 turns in one parquet file must not
+        serialize into one task, and the row key spreads it by turn_idx.
         Only the slim (conv_id, turn_idx, text) projection is shuffled.
         """
         turns = transcripts.select("conv_id", "turn_idx", "text")
-        turns = salted_repartition(turns, "conv_id", self.salt_buckets)
-        return extract_triples(turns)
+        # The explicit count is required for this CPU-bound stage: a bare
+        # repartition(cols) is subject to AQE partition coalescing, which
+        # sizes partitions by BYTES (64 MB advisory) and would collapse the
+        # extraction kernel onto a handful of tasks. 2x parallelism keeps
+        # every core busy with mild imbalance tolerance.
+        n = 2 * self.spark.sparkContext.defaultParallelism
+        return extract_triples(turns.repartition(n, "conv_id", "turn_idx"))
 
     def link_table(self, surface_triples: DataFrame, alias_dict: DataFrame) -> DataFrame:
         """Stage 3: distinct mention vocabulary → entity ids."""

@@ -8,7 +8,6 @@ from nebula_importer_spark.operators.connected_components import (
     connected_components,
 )
 from nebula_importer_spark.operators.linking import link_mentions, minhash_lsh_join
-from nebula_importer_spark.operators.skew import salted_repartition
 
 
 def test_connected_components_basic(spark):
@@ -74,15 +73,6 @@ def test_link_mentions_exact_and_fuzzy(spark):
     assert "nonsense qqq" not in rows  # unlinked → absent
 
 
-def test_salted_repartition_spreads_mega_key(spark):
-    df = spark.createDataFrame([("mega", i) for i in range(1000)], "k string, v int")
-    out = salted_repartition(df, "k", salt_buckets=8, num_partitions=8)
-    parts = (
-        out.groupBy(F.spark_partition_id().alias("p")).count().filter("count > 0").count()
-    )
-    assert parts >= 4  # one key no longer serializes into one task
-
-
 def test_connected_components_union_find_parity(spark):
     """Randomized exact parity vs a Python union-find over a graph with a
     deep chain, self-loops, and duplicate edges — guards both convergence
@@ -131,89 +121,6 @@ def test_connected_components_deep_chain_default_jumps(spark):
     bad = got.filter(F.col("component") != 0).count()
     assert bad == 0
     assert got.count() == n
-
-
-def test_spread_small_input_no_rdd_conversion(spark, tmp_path, monkeypatch):
-    """spread_small_input must decide via plan/file inspection, never via
-    df.rdd (which physical-plans + instantiates the RDD chain per call)."""
-    from pyspark.sql import DataFrame
-
-    from nebula_importer_spark.operators.skew import spread_small_input
-
-    p = str(tmp_path / "small.parquet")
-    spark.range(100).coalesce(1).write.parquet(p)
-
-    def boom(self):  # noqa: ANN001
-        raise AssertionError(".rdd must not be touched on the spread path")
-
-    monkeypatch.setattr(DataFrame, "rdd", property(boom))
-
-    # single-file scan → spread (Repartition node appears)
-    scan = spark.read.parquet(p)
-    out = spread_small_input(scan)
-    assert "Repartition" in out._jdf.queryExecution().analyzed().toString()
-
-    # caller hint says the scan is already parallel → no-op, same object
-    assert spread_small_input(scan, input_splits=64) is scan
-
-    # post-shuffle frame (groupBy) is already spread → no-op
-    agg = scan.groupBy("id").count()
-    assert spread_small_input(agg) is agg
-
-    # createDataFrame local relation parallelizes on its own → no-op
-    local = spark.createDataFrame([(1,), (2,)], "x long")
-    assert spread_small_input(local) is local
-
-
-def test_spread_small_input_heuristic_false_positives(spark, tmp_path):
-    """Review-confirmed traps: plan-SUBSTRING matching treated a column
-    named SortKey, a coalesce(1), and a broadcast join as already-spread,
-    silently reintroducing the one-core trap. All three must spread."""
-    from pyspark.sql import functions as F
-
-    from nebula_importer_spark.operators.skew import spread_small_input
-
-    def n_parts(df):
-        return df.rdd.getNumPartitions()
-
-    # (a) column whose NAME contains a node name ("SortKey" ⊃ "Sort")
-    p = str(tmp_path / "sortkey.parquet")
-    spark.range(100).select(
-        F.col("id"), F.col("id").alias("SortKey"), F.col("id").alias("JoinCol")
-    ).coalesce(1).write.parquet(p)
-    scan = spark.read.parquet(p)
-    assert n_parts(spread_small_input(scan)) >= 2
-
-    # (b) explicit coalesce(1) caps the width — must be re-spread
-    assert n_parts(spread_small_input(scan.coalesce(1))) >= 2
-
-    # (c) broadcast join has a Join node but NO shuffle — must be re-spread
-    dim = spark.createDataFrame([(0, "a")], "id long, v string")
-    bj = scan.join(F.broadcast(dim), "id", "left")
-    assert n_parts(spread_small_input(bj)) >= 2
-
-    # control: a real shuffle at full width stays a no-op
-    agg = scan.repartition(4, "id")
-    assert spread_small_input(agg) is agg
-
-
-def test_parse_byte_conf_suffixes():
-    from nebula_importer_spark.operators.skew import _parse_byte_conf
-
-    assert _parse_byte_conf("134217728b") == 134217728
-    assert _parse_byte_conf("128m") == 128 << 20
-    assert _parse_byte_conf("128mb") == 128 << 20
-    assert _parse_byte_conf("1gb") == 1 << 30
-    assert _parse_byte_conf("2t") == 2 << 40
-
-
-def test_spread_small_input_result_correct(spark, tmp_path):
-    from nebula_importer_spark.operators.skew import spread_small_input
-
-    p = str(tmp_path / "s2.parquet")
-    spark.range(1000).coalesce(1).write.parquet(p)
-    out = spread_small_input(spark.read.parquet(p))
-    assert out.count() == 1000
 
 
 # ---------------------------------------------------------------------------

@@ -94,6 +94,33 @@ def test_extraction_recall_vs_golden(spark, sdfs, corpus):
     assert p >= 0.85, f"precision vs golden {p:.3f}"
 
 
+def test_triples_surface_spreads_a_mega_thread(spark):
+    """One conversation of 400 turns arriving as one partition spreads over
+    the extraction tasks by its row key: one hash exchange on (conv_id,
+    turn_idx), no task holding more than twice the mean."""
+    import re
+
+    mega = gen_corpus_local(
+        seed=5, n_convs=1, turns_per_conv=1, mega_conv_turns=400, relation_rate=1.0
+    )
+    turns = mega.to_spark(spark)["transcripts"].coalesce(1)
+    out = TranscriptPipeline(spark).triples_surface(turns)
+    counts = [
+        r["n"]
+        for r in out.groupBy(F.spark_partition_id().alias("p"))
+        .agg(F.count(F.lit(1)).alias("n"))
+        .collect()
+    ]
+    assert len(counts) >= 4, counts
+    assert max(counts) <= 2 * sum(counts) / len(counts), counts
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    exchanges = re.findall(r"\w*Exchange .*", plan)
+    assert len(exchanges) == 1, plan
+    assert re.match(
+        r"Exchange hashpartitioning\(conv_id#\d+, turn_idx#\d+, \d+\)", exchanges[0]
+    ), plan
+
+
 def test_end_to_end_materialization(spark, sdfs, tmp_path):
     pipe = TranscriptPipeline(spark)
     res = pipe.run(sdfs["transcripts"], sdfs["alias_dict"], sdfs["same_as"], tmp_path)
@@ -151,6 +178,94 @@ def test_rerun_into_same_output_equals_one_run(spark, sdfs, tmp_path):
     assert (res2.turns, res2.triples, res2.unlinked_mentions) == (
         res.turns, res.triples, res.unlinked_mentions
     )
+
+
+def _sorted_outputs(spark, out, res) -> dict:
+    """Sorted rows of the kg tables and the unlinked rejects, plus the
+    run's counts."""
+    from nebula_importer_spark.plans.merge import TableStore
+
+    root = out / "kg"
+    store = TableStore(root, spark)
+
+    def rows(df):
+        return sorted(tuple(r) for r in df.select(*sorted(df.columns)).collect())
+
+    return {
+        "tags/entity": rows(store.read("tags/entity")),
+        "edges/relation": rows(store.read("edges/relation")),
+        "_rejects/unlinked": rows(spark.read.parquet(str(root / "_rejects" / "unlinked"))),
+        "counts": (res.turns, res.triples, res.unlinked_mentions),
+    }
+
+
+@pytest.fixture(scope="module")
+def uninterrupted(spark, sdfs, tmp_path_factory):
+    """The sorted outputs of one uninterrupted run()."""
+    out = tmp_path_factory.mktemp("uninterrupted")
+    res = TranscriptPipeline(spark).run(
+        sdfs["transcripts"], sdfs["alias_dict"], sdfs["same_as"], out
+    )
+    return _sorted_outputs(spark, out, res)
+
+
+def test_resume_after_a_crash_in_the_links_stage(
+    spark, sdfs, uninterrupted, tmp_path, monkeypatch
+):
+    """link_table fails once after stage/surface_triples is committed: the
+    resumed run reads the surface snapshot instead of extracting again, and
+    its outputs equal an uninterrupted run's."""
+    args = (sdfs["transcripts"], sdfs["alias_dict"], sdfs["same_as"])
+    link_table = TranscriptPipeline.link_table
+
+    def crash(self, *a, **k):
+        monkeypatch.setattr(TranscriptPipeline, "link_table", link_table)
+        raise RuntimeError("links stage crashed")
+
+    monkeypatch.setattr(TranscriptPipeline, "link_table", crash)
+    out = tmp_path / "crashed"
+    with pytest.raises(RuntimeError, match="links stage crashed"):
+        TranscriptPipeline(spark).run(*args, out)
+    res = TranscriptPipeline(spark).run(*args, out, resume=True)
+    assert "stage/surface_triples" not in res.stages
+    assert "stage/links" in res.stages
+    assert _sorted_outputs(spark, out, res) == uninterrupted
+
+
+def test_resume_after_a_crash_between_the_materialize_merges(
+    spark, sdfs, uninterrupted, tmp_path, monkeypatch
+):
+    """The edges/relation merge fails once after tags/entity is committed:
+    the resumed run INSERTs into the live tags/entity buckets, and its
+    outputs equal an uninterrupted run's."""
+    from nebula_importer_spark.plans.merge import TableStore
+
+    args = (sdfs["transcripts"], sdfs["alias_dict"], sdfs["same_as"])
+    merge_commit = TableStore.merge_commit
+
+    def crash(self, df, table, *a, **k):
+        if table != "edges/relation":
+            return merge_commit(self, df, table, *a, **k)
+        monkeypatch.setattr(TableStore, "merge_commit", merge_commit)
+        raise RuntimeError("relation merge crashed")
+
+    monkeypatch.setattr(TableStore, "merge_commit", crash)
+    out = tmp_path / "crashed"
+    with pytest.raises(RuntimeError, match="relation merge crashed"):
+        TranscriptPipeline(spark).run(*args, out)
+    store = TableStore(out / "kg", spark)
+
+    def entity_buckets() -> dict[str, int]:
+        return store.read_manifest()["tables"]["tags/entity"]["buckets"]
+
+    live = entity_buckets()
+    assert live and set(live.values()) == {1}
+    assert store.current_version("edges/relation") is None
+    res = TranscriptPipeline(spark).run(*args, out, resume=True)
+    assert not {"stage/surface_triples", "stage/links"} & set(res.stages)
+    # the resumed entity merge rewrote every live bucket as version 2
+    assert entity_buckets() == dict.fromkeys(live, 2)
+    assert _sorted_outputs(spark, out, res) == uninterrupted
 
 
 def _job_names(sc, group: str) -> list[str]:

@@ -52,7 +52,7 @@ else:
 spark.sparkContext.setLogLevel("ERROR")
 transcripts = gen_transcripts_spark(spark, n_turns=turns, n_convs=max(turns // 100, 10))
 transcripts = transcripts.localCheckpoint(eager=True)  # materialize input OUTSIDE the timed region
-pipe = TranscriptPipeline(spark, salt_buckets=max(cores * 2, 32))
+pipe = TranscriptPipeline(spark)
 # Warm the Python worker pool (one tiny mapInPandas wave): workers are
 # long-lived on a real cluster; cold-starting {{cores}} pandas interpreters
 # at once costs ~0.5s/core and would measure import time, not throughput.
