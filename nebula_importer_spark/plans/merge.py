@@ -55,6 +55,23 @@ MANIFEST = "_manifest.json"
 BUCKET_COL = "_b"
 
 
+def replace_partition(df: DataFrame, path: str | Path, key: str, value) -> None:
+    """Write ``df`` as partition ``key=value`` of the parquet dir ``path``,
+    replacing what that partition held and leaving the others alone.
+
+    Dynamic partition overwrite (a writer option, not the session conf,
+    which every concurrent writer would inherit) makes a side output safe
+    to rewrite: a stage that reruns after a crash, or a replayed
+    micro-batch, replaces its own rows instead of appending a second copy.
+    Writers of different partitions may run at once: each job stages its
+    files under its own ``.spark-staging-<jobId>`` dir and renames only its
+    partition into place, where appends share ``<path>/_temporary/0`` and
+    lose rows. An empty ``df`` writes no partition: an older one stays."""
+    df.withColumn(key, F.lit(value)).write.mode("overwrite").option(
+        "partitionOverwriteMode", "dynamic"
+    ).partitionBy(key).parquet(str(path))
+
+
 class TableStore:
     def __init__(
         self,

@@ -5,8 +5,10 @@ The Spark re-expression of the reference's manager+importer data plane
 per source, fan-out to every tag/edge spec bound to it (G7 single-scan
 multi-sink, reference pkg/config/v3/source.go:42-62), each spec compiled to a
 filter + select of Column expressions (no per-row code), modes materialized
-through the snapshot TableStore, rejects + per-file lineage metrics written
-per run.
+through the snapshot TableStore. Each stage writes its rejects and per-file
+lineage metrics as its own ``stage=<stage>`` partition of ``_rejects/<kind>``
+and ``_metrics``, replaced whole (``replace_partition``), so a stage that
+runs again replaces its rows instead of adding a second copy.
 
 ``run()`` submits its independent Spark jobs from driver threads at once,
 as the reference runs its reader and importer goroutine pools
@@ -30,7 +32,6 @@ import logging
 import operator
 import re
 import tempfile
-import threading
 import time
 import uuid
 from concurrent.futures import ThreadPoolExecutor
@@ -66,7 +67,7 @@ _NGQL_DDL = re.compile(
 )
 from nebula_importer_spark.functions.filter_dsl import compile_filter
 from nebula_importer_spark.functions.picker import compile_id, compile_prop, compile_rank
-from nebula_importer_spark.plans.merge import TableStore
+from nebula_importer_spark.plans.merge import TableStore, replace_partition
 from nebula_importer_spark.plans.metrics import ElementStats, RunResult, StatsMeter
 from nebula_importer_spark.session import fs_delete
 from nebula_importer_spark.sources.reader import FILE_COL, SEQ_COL, read_source
@@ -302,8 +303,11 @@ class Pipeline:
         chain order) is raised once every stage already running has
         finished; the stages that completed stay recorded for ``resume``.
 
-        Without ``resume`` the rejects and metrics hold this run only; with
-        it, those of the completed stages are kept. The scans this run
+        Each stage writes its rejects and metrics as its own ``stage=``
+        partition, replaced whole: a stage rerun after a crash before its
+        ``mark_stage`` leaves one copy of its rows. Without ``resume`` the
+        rejects and metrics hold this run only; with it, those of the
+        completed stages are kept. The scans this run
         staged (and their remote downloads) are deleted when it returns or
         raises; scans staged earlier by a library read stay."""
         from nebula_importer_spark.logging_util import build_logger
@@ -318,13 +322,6 @@ class Pipeline:
         result = RunResult(space=self.config.space)
         rejects_dir = Path(out_dir) / self.config.space / "_rejects"
         mpath = Path(out_dir) / self.config.space / "_metrics"
-        # Stages append rows into these shared dirs. Two appends into one
-        # parquet dir at once share its _temporary/0 and lose rows, so each
-        # dir takes one writer at a time.
-        appends = {
-            p: threading.Lock()
-            for p in (*(rejects_dir / k for k in ("csv", "tag", "edge")), mpath)
-        }
         log.info(
             "import start: space=%s sources=%d out=%s",
             self.config.space,
@@ -336,9 +333,10 @@ class Pipeline:
             self._run_hook(hook)
 
         if not resume:
-            # rejects and metrics are appended stage by stage: clear what
-            # an earlier run into this output left
-            for p in appends:
+            # each stage replaces its own partition of the rejects and
+            # metrics, and a stage with no rows writes none: clear what an
+            # earlier run into this output left
+            for p in (*(rejects_dir / k for k in ("csv", "tag", "edge")), mpath):
                 fs_delete(self.spark, str(p))
 
         # one chain per target table: its elements, numbered in config order
@@ -353,7 +351,7 @@ class Pipeline:
                 staged = _run_all(
                     self.spark,
                     [
-                        partial(self._stage_source, i, store, appends, rejects_dir, resume)
+                        partial(self._stage_source, i, store, rejects_dir, resume)
                         for i in range(len(self.config.sources))
                     ],
                 )
@@ -363,8 +361,7 @@ class Pipeline:
                     self.spark,
                     [
                         partial(
-                            self._run_chain, chain, store, appends, rejects_dir, mpath,
-                            resume, meter,
+                            self._run_chain, chain, store, rejects_dir, mpath, resume, meter
                         )
                         for chain in chains.values()
                     ],
@@ -401,12 +398,12 @@ class Pipeline:
         )
         return result
 
-    def _stage_source(self, i, store, appends, rejects_dir, resume) -> int:
+    def _stage_source(self, i, store, rejects_dir, resume) -> int:
         """Phase 1 of run(): stage source ``i`` and write its CSV rejects.
         Returns the CSV reject count. A resumed run stages a source only if
         one of its stages is not complete, so phase 2 never stages one."""
-        # The rejects write is a resumable stage of its own: a resumed run
-        # must not append the same reject rows twice.
+        # The rejects write is a resumable stage of its own, written as its
+        # partition of _rejects/csv.
         rej_stage = f"s{i}/rejects"
         if resume and store.stage_completed(rej_stage):
             if not all(
@@ -421,16 +418,16 @@ class Pipeline:
         # .count() pass; at scale every extra count is a full scan of the
         # staged source).
         rej_obs = Observation()
-        with appends[rejects_dir / "csv"]:
-            csv_rejects.observe(
-                rej_obs, F.count(F.lit(1)).alias("n")
-            ).write.mode("append").parquet(str(rejects_dir / "csv"))
+        replace_partition(
+            csv_rejects.observe(rej_obs, F.count(F.lit(1)).alias("n")),
+            rejects_dir / "csv", "stage", rej_stage,
+        )
         n_rej = int(rej_obs.get["n"])
         store.mark_stage(rej_stage, rejected=n_rej)
         return n_rej
 
     def _run_chain(
-        self, chain, store, appends, rejects_dir, mpath, resume, meter
+        self, chain, store, rejects_dir, mpath, resume, meter
     ) -> dict[int, ElementStats]:
         """Phase 2 of run(): commit the elements ``(n, element)`` of one
         target table, in order. Returns their stats by ``n``."""
@@ -464,24 +461,24 @@ class Pipeline:
             es.filtered = n_good - n_mapped
             if n_bad:
                 bad = mapped.filter(null_key)
-                with appends[rejects_dir / kind]:
+                replace_partition(
                     bad.select(
                         F.col(FILE_COL),
                         F.col(SEQ_COL),
                         F.lit("null_key").alias("reason"),
                         F.to_json(F.struct(*[c for c in bad.columns])).alias("raw"),
-                    ).write.mode("append").parquet(str(rejects_dir / kind))
+                    ),
+                    rejects_dir / kind, "stage", stage,
+                )
             n_ok = n_mapped - n_bad
             # Per-file lineage metrics (M3 analog) written as a
             # DataFrame — never .collect()ed: at 100 TB the file count
             # is 10^5-10^6 rows, which belongs on disk, not in a
             # driver-side Python list.
-            with appends[mpath]:
-                ok.groupBy(FILE_COL).agg(F.count("*").alias("rows")).select(
-                    F.lit(stage).alias("stage"),
-                    F.col(FILE_COL).alias("file"),
-                    "rows",
-                ).write.mode("append").parquet(str(mpath))
+            replace_partition(
+                ok.groupBy(F.col(FILE_COL).alias("file")).agg(F.count("*").alias("rows")),
+                mpath, "stage", stage,
+            )
             es.rejected = n_bad + unmatched
             es.written = n_ok - unmatched
             store.mark_stage(stage, written=es.written, rejected=es.rejected)

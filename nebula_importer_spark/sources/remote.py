@@ -35,7 +35,6 @@ from __future__ import annotations
 import fnmatch
 import os
 import posixpath
-import tempfile
 import uuid
 from dataclasses import dataclass
 from pathlib import Path
@@ -214,7 +213,9 @@ class GCSOptions:
     credentials_json: str | None = None
     without_authentication: bool = False
 
-    def resolve(self) -> tuple[str, dict[str, str]]:
+    def resolve(self, staging_dir: str | None = None) -> tuple[str, dict[str, str]]:
+        """Inline ``credentials_json`` is written (mode 0600) to a keyfile
+        under ``staging_dir``, which the caller owns and deletes."""
         if not self.bucket or not self.key:
             raise RemoteConfigError("gcs source requires bucket and key")
         conf: dict[str, str] = {}
@@ -226,14 +227,15 @@ class GCSOptions:
         elif self.credentials_json:
             # connector wants a file; stage the inline JSON (reference
             # gcs.go:48-49 WithCredentialsJSON)
-            f = tempfile.NamedTemporaryFile(
-                "w", suffix=".json", prefix="gcs-cred-", delete=False
-            )
-            f.write(self.credentials_json)
-            f.close()
-            os.chmod(f.name, 0o600)
+            if staging_dir is None:
+                raise RemoteConfigError("gcs credentialsJSON needs a staging dir")
+            Path(staging_dir).mkdir(parents=True, exist_ok=True)
+            keyfile = os.path.join(staging_dir, "gcs-credentials.json")
+            fd = os.open(keyfile, os.O_WRONLY | os.O_CREAT | os.O_TRUNC, 0o600)
+            with os.fdopen(fd, "w") as f:
+                f.write(self.credentials_json)
             conf["fs.gs.auth.type"] = "SERVICE_ACCOUNT_JSON_KEYFILE"
-            conf["fs.gs.auth.service.account.json.keyfile"] = f.name
+            conf["fs.gs.auth.service.account.json.keyfile"] = keyfile
         elif self.without_authentication:
             conf["fs.gs.auth.type"] = "UNAUTHENTICATED"
         return f"gs://{self.bucket}/{self.key.lstrip('/')}", conf
@@ -444,12 +446,13 @@ def apply_hadoop_conf(spark: SparkSession, conf: dict[str, str]) -> None:
 def resolve_remote(spark: SparkSession, spec, staging_dir: str) -> str:
     """Resolve a SourceSpec's remote block (if any) to a readable URI,
     applying credential conf / staging downloads as needed. An FTP/SFTP
-    download lands in ``staging_dir``, which the caller owns and deletes.
-    Returns the spec's plain path when no remote block is set."""
+    download and a GCS inline-credentials keyfile land in ``staging_dir``,
+    which the caller owns and deletes. Returns the spec's plain path when
+    no remote block is set."""
     for attr in ("s3", "oss", "gcs", "hdfs"):
         opts = getattr(spec, attr, None)
         if opts is not None:
-            uri, conf = opts.resolve()
+            uri, conf = opts.resolve(staging_dir) if attr == "gcs" else opts.resolve()
             apply_hadoop_conf(spark, conf)
             return uri
     for attr in ("ftp", "sftp"):

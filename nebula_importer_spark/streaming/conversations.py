@@ -45,6 +45,8 @@ from pathlib import Path
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from nebula_importer_spark.plans.merge import replace_partition
+
 _STORE_COLS = [
     "conv_id",
     "n_turns",
@@ -107,16 +109,7 @@ def run_incremental_conv_stats(
     out = str(out_dir)
 
     def _sink(batch_df: DataFrame, batch_id: int) -> None:
-        # per-writer dynamic overwrite (NOT a session-conf toggle: any
-        # concurrent writer sharing the session would inherit the mode)
-        (
-            _partial_stats(batch_df)
-            .withColumn("_batch_id", F.lit(batch_id))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("_batch_id")
-            .parquet(out)
-        )
+        replace_partition(_partial_stats(batch_df), out, "_batch_id", batch_id)
 
     writer = stream.writeStream.foreachBatch(_sink).option(
         "checkpointLocation", str(checkpoint_dir)

@@ -45,6 +45,8 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.errors import AnalysisException
 
+from nebula_importer_spark.plans.merge import replace_partition
+
 
 def _join(base: str, *parts: str) -> str:
     """URI-safe path join: plain string concat so scheme-qualified paths
@@ -140,21 +142,9 @@ def run_incremental_novelty(
                 flagged.select("_id", stale.cast("long").alias("_stale")),
                 id_col=id_col,
             )
-            (
-                report.withColumn("_batch_id", F.lit(batch_id))
-                .write.mode("overwrite")
-                .option("partitionOverwriteMode", "dynamic")
-                .partitionBy("_batch_id")
-                .parquet(novelty_dir)
-            )
-            (
-                bfirst.select("_h", F.col("_bfirst").alias("_first"))
-                .withColumn("_batch_id", F.lit(batch_id))
-                .write.mode("overwrite")
-                .option("partitionOverwriteMode", "dynamic")
-                .partitionBy("_batch_id")
-                .parquet(grams_dir)
-            )
+            replace_partition(report, novelty_dir, "_batch_id", batch_id)
+            grams = bfirst.select("_h", F.col("_bfirst").alias("_first"))
+            replace_partition(grams, grams_dir, "_batch_id", batch_id)
             seen["batches"] += 1
             seen["docs"] += report.count()  # batch-sized (persisted grams)
         finally:

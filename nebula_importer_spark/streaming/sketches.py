@@ -25,6 +25,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from nebula_importer_spark.plans.merge import replace_partition
+
 
 def run_incremental_cms(
     stream: DataFrame,
@@ -54,13 +56,7 @@ def run_incremental_cms(
 
     def _process(batch_df: DataFrame, batch_id: int) -> None:
         m = cms_matrix(batch_df, col, depth=depth, width=width, salt=salt)
-        (
-            m.withColumn("_batch_id", F.lit(batch_id))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("_batch_id")
-            .parquet(cms_dir)
-        )
+        replace_partition(m, cms_dir, "_batch_id", batch_id)
         seen["batches"] += 1
 
     writer = stream.writeStream.foreachBatch(_process).option(
@@ -106,13 +102,7 @@ def run_incremental_hll(
         regs = hll_registers(
             batch_df, col, p=p, group_cols=group_cols, salt=salt
         )
-        (
-            regs.withColumn("_batch_id", F.lit(batch_id))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("_batch_id")
-            .parquet(hll_dir)
-        )
+        replace_partition(regs, hll_dir, "_batch_id", batch_id)
         seen["batches"] += 1
 
     writer = stream.writeStream.foreachBatch(_process).option(
@@ -192,13 +182,7 @@ def run_incremental_buckets(
             .groupBy("key", "bucket")
             .agg(F.count(F.lit(1)).cast("long").alias("n"))
         )
-        (
-            counts.withColumn("_batch_id", F.lit(batch_id))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("_batch_id")
-            .parquet(b_dir)
-        )
+        replace_partition(counts, b_dir, "_batch_id", batch_id)
         seen["batches"] += 1
 
     writer = stream.writeStream.foreachBatch(_process).option(
@@ -279,13 +263,7 @@ def run_incremental_kmv(
             ).drop("_r")
         else:
             kept = hx.orderBy("_h").limit(k)
-        (
-            kept.withColumn("_batch_id", F.lit(batch_id))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("_batch_id")
-            .parquet(kmv_dir)
-        )
+        replace_partition(kept, kmv_dir, "_batch_id", batch_id)
         seen["batches"] += 1
 
     writer = stream.writeStream.foreachBatch(_process).option(

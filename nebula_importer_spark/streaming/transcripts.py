@@ -42,7 +42,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from nebula_importer_spark.config.model import Mode
-from nebula_importer_spark.plans.merge import TableStore
+from nebula_importer_spark.plans.merge import TableStore, replace_partition
 
 TRANSCRIPT_SCHEMA = T.StructType(
     [
@@ -83,9 +83,10 @@ def run_incremental_kg(
     Per micro-batch: extract surface triples (Arrow-batched mapInPandas
     after a hash repartition on (conv_id, turn_idx)) → link mentions
     against the broadcast alias dict → keyed INSERT-merge into
-    `<out>/kg/triples`; unlinked mentions append to
-    `<out>/kg/_rejects/stream`. With ``available_now`` the call processes
-    every file currently present and returns (incremental batch job shape);
+    `<out>/kg/triples`; unlinked mentions replace the batch's `_batch_id`
+    partition of `<out>/kg/_rejects/stream`. With ``available_now`` the call
+    processes every file currently present and returns (incremental batch
+    job shape);
     pass False for a continuously-running query — the caller gets the
     StreamingQuery handle under "query" (stop/awaitTermination/exception
     are the caller's to manage).
@@ -113,17 +114,13 @@ def run_incremental_kg(
                 triples.observe(tri_obs, F.count(F.lit(1)).alias("n")),
                 "triples", Mode.INSERT, TRIPLE_KEY,
             )
-            # Rejects keyed by batch_id with DYNAMIC partition overwrite:
-            # a replayed micro-batch (crash between this write and the
-            # checkpoint commit) rewrites its own _batch_id partition
-            # instead of appending duplicates — the reject stream gets the
-            # same exactly-once shape as the keyed triple merge.
-            (
-                unlinked.withColumn("_batch_id", F.lit(batch_id))
-                .write.mode("overwrite")
-                .option("partitionOverwriteMode", "dynamic")
-                .partitionBy("_batch_id")
-                .parquet(str(out / "kg" / "_rejects" / "stream"))
+            # Rejects keyed by batch_id: a replayed micro-batch (crash
+            # between this write and the checkpoint commit) rewrites its
+            # own _batch_id partition instead of appending duplicates — the
+            # reject stream gets the same exactly-once shape as the keyed
+            # triple merge.
+            replace_partition(
+                unlinked, out / "kg" / "_rejects" / "stream", "_batch_id", batch_id
             )
             seen["batches"] += 1
             seen["rows"] += _observed_rows(tri_obs)

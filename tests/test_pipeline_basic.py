@@ -464,6 +464,12 @@ def test_concurrent_appends_keep_every_row_once(spark, tmp_path):
     for kind in ("tag", "edge"):
         got = rows(f"_rejects/{kind}", "reason")
         assert got == [(f"p{k}.csv", "null_key") for k in range(3)]
+        assert rows(f"_rejects/{kind}", "stage") == [
+            (f"p{k}.csv", f"s{k}/{kind}/{kind[0]}{k}/INSERT") for k in range(3)
+        ]
+    assert rows("_rejects/csv", "stage") == [
+        (f"p{k}.csv", f"s{k}/rejects") for k in range(3)
+    ]
     metrics = spark.read.parquet(str(space / "_metrics"))
     assert _rows(
         metrics.select("stage", F.element_at(F.split("file", "/"), -1), "rows")
@@ -498,18 +504,25 @@ def _failing_update_config(tmp_path: Path, prop: str) -> GraphConfig:
     )
 
 
-def _outputs(spark, out: Path) -> dict:
+def _outputs(spark, out: Path, tables=("tags/t", "tags/u", "edges/e")) -> dict:
+    """Sorted rows of ``tables``, the rejects and the metrics, and the
+    stats each stage recorded in the manifest."""
+    from nebula_importer_spark.plans.merge import TableStore
+
     space = out / "s"
 
     def rows(path: Path) -> list[tuple]:
         return _rows(spark.read.parquet(str(path))) if path.exists() else []
 
+    stages = TableStore(space, spark).read_manifest()["stages"]
     return {
-        "tables": {
-            t: _table_rows(spark, out, t) for t in ("tags/t", "tags/u", "edges/e")
-        },
+        "tables": {t: _table_rows(spark, out, t) for t in tables},
         "rejects": {k: rows(space / "_rejects" / k) for k in ("csv", "tag", "edge")},
         "metrics": rows(space / "_metrics"),
+        "stages": {
+            name: {k: v for k, v in info.items() if k != "at"}
+            for name, info in stages.items()
+        },
     }
 
 
@@ -578,3 +591,36 @@ def test_close_deletes_the_scans_library_reads_staged(spark, tmp_path):
         assert q.statements("KNOWS").count() >= 1
         assert len(_staged(stage)) == 1
     assert _staged(stage) == []
+
+
+@pytest.mark.parametrize("crashed", ["s0/tag/t0/INSERT", "s0/rejects"])
+def test_resume_after_a_crash_before_mark_stage(spark, tmp_path, monkeypatch, crashed):
+    """A stage's ``mark_stage`` fails once after its rejects and metrics
+    are written (an element stage, or a source's CSV-rejects stage). The
+    resumed run writes that stage again, and leaves the tables, the
+    rejects, the metrics and the stats of one uninterrupted run."""
+    from nebula_importer_spark.plans.merge import TableStore
+    from nebula_importer_spark.plans.pipeline import elements
+
+    cfg = _three_rejecting_sources(tmp_path)
+    tables = sorted({el.table for el in elements(cfg)})
+    whole_out = tmp_path / "whole"
+    whole = Pipeline(cfg, spark).run(whole_out)
+    mark_stage = TableStore.mark_stage
+
+    def crash(self, stage, **info):
+        if stage != crashed:
+            return mark_stage(self, stage, **info)
+        monkeypatch.setattr(TableStore, "mark_stage", mark_stage)
+        raise RuntimeError("crashed before mark_stage")
+
+    monkeypatch.setattr(TableStore, "mark_stage", crash)
+    out = tmp_path / "out"
+    with pytest.raises(RuntimeError, match="crashed before mark_stage"):
+        Pipeline(cfg, spark).run(out)
+    assert crashed not in TableStore(out / "s", spark).read_manifest()["stages"]
+    resumed = Pipeline(cfg, spark).run(out, resume=True)
+    assert _outputs(spark, out, tables) == _outputs(spark, whole_out, tables)
+    assert resumed.csv_rejects == whole.csv_rejects == 3
+    rerun = [e for e in whole.elements if crashed == "s0/rejects" or e.name == "t0"]
+    assert resumed.elements == rerun

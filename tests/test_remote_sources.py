@@ -60,6 +60,39 @@ def test_gcs_and_hdfs_resolve():
     assert conf["env.HADOOP_USER_NAME"] == "etl"
 
 
+def test_gcs_inline_credentials_are_written_under_the_staging_dir(spark, tmp_path):
+    """credentialsJSON becomes a 0600 keyfile in the scan's staging dir,
+    which the scan's owner deletes, and never a file in the system temp
+    dir."""
+    import os
+    import stat
+    import tempfile
+    import uuid
+
+    tmp = tempfile.gettempdir()
+    before = set(os.listdir(tmp))
+    secret = f'{{"type": "service_account", "private_key_id": "{uuid.uuid4().hex}"}}'
+    stage = tmp_path / "stage"
+    spec = SourceSpec(
+        gcs=GCSOptions(bucket="gb", key="k.csv", credentials_json=secret),
+        tags=[],
+        edges=[],
+    )
+    assert resolve_remote(spark, spec, str(stage)) == "gs://gb/k.csv"
+    hconf = spark.sparkContext._jsc.hadoopConfiguration()
+    keyfile = Path(hconf.get("fs.gs.auth.service.account.json.keyfile"))
+    assert keyfile.parent == stage
+    assert keyfile.read_text() == secret
+    assert stat.S_IMODE(keyfile.stat().st_mode) == 0o600
+    leaked = [
+        name
+        for name in set(os.listdir(tmp)) - before
+        if os.path.isfile(os.path.join(tmp, name))
+        and secret in Path(tmp, name).read_text(errors="replace")
+    ]
+    assert leaked == []
+
+
 def test_apply_hadoop_conf_sets_live_session_keys(spark, tmp_path):
     spec = SourceSpec(
         s3=S3Options(bucket="bx", key="k.csv", endpoint="http://e:9000",

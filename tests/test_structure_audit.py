@@ -13,6 +13,11 @@
 4. Every top-level def/class of the package must be named somewhere
    outside its own definition: in the package, ``tests/``, ``tools/`` or
    ``kgbench/``. A function nothing names is dead code.
+5. No batch write in the package may append (``.write.mode("append")``):
+   an append that runs again after a crash adds a second copy of its
+   rows, and two appends into one dir at once lose rows. A stage writes
+   its own partition with ``plans.merge.replace_partition`` instead.
+   Streaming ``outputMode("append")`` is a different API and is allowed.
 """
 
 from __future__ import annotations
@@ -176,6 +181,34 @@ def unnamed_toplevel_defs(package: Path, roots: list[Path]) -> list[str]:
     return unnamed
 
 
+def _on_batch_writer(node: ast.AST) -> bool:
+    """Whether a call chain's receiver passes through ``.write``."""
+    while isinstance(node, (ast.Attribute, ast.Call)):
+        if isinstance(node, ast.Attribute):
+            if node.attr == "write":
+                return True
+            node = node.value
+        else:
+            node = node.func
+    return False
+
+
+def append_writes(source: str) -> list[int]:
+    """Lines of batch writes in append mode: ``.mode("append")`` or a
+    ``mode="append"`` argument on a ``.write`` chain."""
+    lines = []
+    for node in ast.walk(ast.parse(source)):
+        if not (isinstance(node, ast.Call) and isinstance(node.func, ast.Attribute)):
+            continue
+        args = list(node.args[:1]) if node.func.attr == "mode" else []
+        args += [k.value for k in node.keywords if k.arg == "mode"]
+        if any(
+            isinstance(a, ast.Constant) and a.value == "append" for a in args
+        ) and _on_batch_writer(node.func.value):
+            lines.append(node.lineno)
+    return sorted(lines)
+
+
 def test_no_duplicate_toplevel_definitions():
     offenders = {}
     for path in sorted(PACKAGE.rglob("*.py")):
@@ -271,3 +304,27 @@ def test_unnamed_definition_audit_flags_a_planted_def(tmp_path):
         path.parent.mkdir(parents=True, exist_ok=True)
         path.write_text(text)
     assert unnamed_toplevel_defs(pkg, [pkg, tests]) == ["pkg/a.py::dead"]
+
+
+def test_no_batch_write_appends():
+    offenders = {}
+    for path in sorted(PACKAGE.rglob("*.py")):
+        lines = append_writes(path.read_text())
+        if lines:
+            offenders[str(path.relative_to(REPO))] = lines
+    assert not offenders, (
+        "append-mode writes (not idempotent; write the stage's own "
+        f"partition with replace_partition): {offenders}"
+    )
+
+
+def test_append_write_audit_flags_planted_appends():
+    source = (
+        'df.write.mode("append").parquet(p)\n'
+        'df.writeStream.outputMode("append").start()\n'
+        'df.write.option("k", 1).mode(\n    "append"\n).csv(p)\n'
+        'df.write.parquet(p, mode="append")\n'
+        'df.write.mode("overwrite").parquet(p)\n'
+        'log.mode("append")\n'
+    )
+    assert append_writes(source) == [1, 3, 6]

@@ -181,8 +181,8 @@ def test_rerun_into_same_output_equals_one_run(spark, sdfs, tmp_path):
 
 
 def _sorted_outputs(spark, out, res) -> dict:
-    """Sorted rows of the kg tables and the unlinked rejects, plus the
-    run's counts."""
+    """Sorted rows of the kg tables and the unlinked rejects, the rows the
+    partition metrics count, and the run's counts."""
     from nebula_importer_spark.plans.merge import TableStore
 
     root = out / "kg"
@@ -195,6 +195,9 @@ def _sorted_outputs(spark, out, res) -> dict:
         "tags/entity": rows(store.read("tags/entity")),
         "edges/relation": rows(store.read("edges/relation")),
         "_rejects/unlinked": rows(spark.read.parquet(str(root / "_rejects" / "unlinked"))),
+        "_metrics/triples_by_partition": spark.read.parquet(
+            str(root / "_metrics" / "triples_by_partition")
+        ).agg(F.sum("rows")).first()[0],
         "counts": (res.turns, res.triples, res.unlinked_mentions),
     }
 
@@ -265,6 +268,37 @@ def test_resume_after_a_crash_between_the_materialize_merges(
     assert not {"stage/surface_triples", "stage/links"} & set(res.stages)
     # the resumed entity merge rewrote every live bucket as version 2
     assert entity_buckets() == dict.fromkeys(live, 2)
+    assert _sorted_outputs(spark, out, res) == uninterrupted
+
+
+def test_resume_after_a_crash_between_the_relation_merge_and_the_side_outputs(
+    spark, sdfs, uninterrupted, tmp_path, monkeypatch
+):
+    """The run crashes once after the edges/relation merge is committed and
+    before the unlinked rejects and partition metrics are written: the
+    resumed run merges into the live buckets again and writes both, and
+    its outputs equal an uninterrupted run's."""
+    from nebula_importer_spark.plans.merge import TableStore
+
+    args = (sdfs["transcripts"], sdfs["alias_dict"], sdfs["same_as"])
+    merge_commit = TableStore.merge_commit
+
+    def crash(self, df, table, *a, **k):
+        out = merge_commit(self, df, table, *a, **k)
+        if table == "edges/relation":
+            monkeypatch.setattr(TableStore, "merge_commit", merge_commit)
+            raise RuntimeError("crashed after the relation merge")
+        return out
+
+    monkeypatch.setattr(TableStore, "merge_commit", crash)
+    out = tmp_path / "crashed"
+    with pytest.raises(RuntimeError, match="crashed after the relation merge"):
+        TranscriptPipeline(spark).run(*args, out)
+    assert TableStore(out / "kg", spark).current_version("edges/relation") == 1
+    assert not (out / "kg" / "_rejects").exists()
+    assert not (out / "kg" / "_metrics").exists()
+    res = TranscriptPipeline(spark).run(*args, out, resume=True)
+    assert not {"stage/surface_triples", "stage/links"} & set(res.stages)
     assert _sorted_outputs(spark, out, res) == uninterrupted
 
 
